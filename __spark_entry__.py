@@ -587,8 +587,9 @@ _FIX_ROUNDS = 5
 
 
 def _fixture_crawl(spark):
-    """One fixture crawl shared by every crawl_* probe (engine run +
-    pure-Python oracle run), cached per SparkSession."""
+    """One fixture crawl shared by every crawl_* probe (engine run on the
+    stratified hot/cold frontier + pure-Python oracle run), cached per
+    SparkSession."""
     key = id(spark)
     if key in _FIXTURE_CRAWL_CACHE:
         return _FIXTURE_CRAWL_CACHE[key]
@@ -704,56 +705,9 @@ def q_crawl_failure_detail(spark, sf):
     )
 
 
-_FIXTURE_STRAT_CACHE: dict[int, tuple] = {}
-
-
-def _fixture_crawl_stratified(spark):
-    """Fixture crawl with the stratified (hot/cold) frontier — the
-    10^10-scale mode (operators/stratified.py): politeness ranks only
-    the hot horizon, the backlog is append-only cold deltas, the
-    in-flight cycle break runs through the fused ever-enqueued exact
-    filter. Admission must still be bit-identical to the oracle."""
-    key = id(spark)
-    if key in _FIXTURE_STRAT_CACHE:
-        return _FIXTURE_STRAT_CACHE[key]
-    import tempfile
-
-    from dnscrawler_spark import datagen
-    from dnscrawler_spark.oracle import crawler as oracle_crawler
-    from dnscrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine
-
-    n = _FIX_N
-    cfg = CrawlConfig(
-        max_rounds=_FIX_ROUNDS, seen_shards=2, seen_bits=1 << 16,
-        seen_buckets=1 << 10, partitions=2, fetch_mode="synthetic",
-        n_pages=n, collect_lineage=False, stratified=True, gen_seed=_FIX_SEED,
-        pipeline_writes=True,  # parity-tested; -43% fixture wall
-    )
-    hs = datagen.generate_host_state_synthetic(spark, datagen.default_n_hosts(n))
-    eng = CrawlEngine(spark, None, tempfile.mkdtemp(prefix="q_strat_"), cfg)
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        snap = eng.start(datagen.seed_urls(_FIX_NSEEDS, n, seed=_FIX_SEED), hs)
-        final = eng.run(snap)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf)
-    n_hosts = datagen.default_n_hosts(n)
-    corpus = [datagen.page_row(i, _FIX_SEED, n, n_hosts) for i in range(n)]
-    ores = oracle_crawler.crawl(
-        corpus, datagen.seed_urls(_FIX_NSEEDS, n, seed=_FIX_SEED),
-        max_rounds=_FIX_ROUNDS, gen_seed=_FIX_SEED,
-    )
-    _FIXTURE_STRAT_CACHE[key] = (eng, final, ores)
-    return _FIXTURE_STRAT_CACHE[key]
-
-
 def q_crawl_stratified_trace(spark, sf):
     """Stratified-frontier crawl ORDER parity, row-exact: every fetched
-    (round, host, priority, depth, url) from the stratified engine run
+    (round, host, priority, depth, url) from the fixture engine run
     vs the oracle's trace (dumped to parquet for the DuckDB twin). A
     hash match here means the hot/cold split + deficit replenish made
     the EXACT admission decisions the full-queue oracle makes."""
@@ -762,7 +716,7 @@ def q_crawl_stratified_trace(spark, sf):
 
     import pandas as pd
 
-    eng, final, ores = _fixture_crawl_stratified(spark)
+    eng, final, ores = _fixture_crawl(spark)
     os.makedirs(_ORACLE_DUMP_DIR, exist_ok=True)
     pd.DataFrame(
         ores.trace_full, columns=["round", "host", "priority", "depth", "url"]

@@ -85,13 +85,12 @@ INSERT_STATS_SCHEMA = T.StructType(
 # whose candidate is glue-ELIGIBLE (expand/qmin discovery, not carry) is
 # the glue short-circuit (dnsresolver_new.py:125-126): resolved from the
 # glue payload in this pass — inserted into SEEN, never fetched.
-# With an ``enqueue`` filter fused in (stratified frontier), the
-# remaining fresh rows additionally carry ``inflight`` (exact membership
-# in the ever-enqueued set E — the distributed in-flight cycle-break,
-# P11, replacing the full-backlog union) and ``blocked`` (robots-gated
-# at enqueue: the key was inserted into SEEN in this pass and must never
-# enter the frontier); stat rows carry each fused filter's new npz path
-# + item count.
+# The remaining fresh rows additionally carry ``inflight`` (exact
+# membership in the ever-enqueued set E — the distributed in-flight
+# cycle-break, P11, with no union over the backlog) and ``blocked``
+# (robots-gated at enqueue: the key was inserted into SEEN in this pass
+# and must never enter the frontier); stat rows carry each fused
+# filter's new npz path + item count.
 MERGED_SCHEMA = T.StructType(
     [
         T.StructField("url_key", T.LongType(), True),
@@ -526,13 +525,14 @@ class SeenFilter:
         insert_keys: DataFrame,
         probe_df: DataFrame,
         round_no: int,
+        *,
+        enqueue: "SeenFilter",
+        block_col,
         key_col: str = "url_key",
         tag: str = "",
         glue: "SeenFilter | None" = None,
         glue_insert_keys: DataFrame | None = None,
         glue_eligible_col=None,
-        enqueue: "SeenFilter | None" = None,
-        block_col=None,
     ):
         """One applyInPandas pass per round instead of two: each shard
         group inserts this round's keys (rewriting its npz + exact-key
@@ -554,21 +554,19 @@ class SeenFilter:
         glue payload (dnsresolver_new.py:125-126): inserted into SEEN in
         this pass, returned in ``parts['resolved']``, never fetched.
 
-        ``enqueue`` (optional, stratified frontier): a further SeenFilter
-        tracking the ever-enqueued set E, fused into the same pass. For
-        every remaining fresh row the pass computes exact membership in
-        E (``inflight`` — the in-flight cycle break P11, replacing the
-        classic full-backlog union+semi-join) and routes:
+        ``enqueue``: the SeenFilter tracking the ever-enqueued set E,
+        fused into the same pass. For every remaining fresh row the pass
+        computes exact membership in E (``inflight`` — the in-flight
+        cycle break P11, with no union over the backlog) and routes:
         ``block_col``-marked rows (robots-gated at enqueue) are inserted
         into SEEN (terminal, never enqueued), the rest are inserted into
         E. All fused filters must share ``n_shards`` (keys land in the
         same shard group).
 
-        Returns ``(new_filter, new_glue, new_enqueue, parts)`` —
-        ``new_enqueue`` is None without ``enqueue``. ``parts`` maps
-        ``resolved`` plus (with enqueue) ``new | nonhaz | blocked`` or
-        (without) ``unseen`` to the matching probe_df subsets, each with
-        the ``glue_hit`` verdict column attached. Verdicts are exact:
+        Returns ``(new_filter, new_glue, new_enqueue, parts)``.
+        ``parts`` maps ``resolved | new | nonhaz | blocked`` to the
+        matching probe_df subsets, each with the ``glue_hit`` verdict
+        column attached. Verdicts are exact:
         bloom/cuckoo fast path plus the in-task shard-pruned tier-3
         confirm (same-round inserts included from the in-memory arrays).
         The single stats collect is the one action that materializes the
@@ -596,20 +594,14 @@ class SeenFilter:
             g_paths, g_key_dirs = {}, []
             g_bits, g_buckets, g_k = n_bits, n_buckets, k
 
-        with_enq = enqueue is not None
-        if with_enq:
-            if enqueue.n_shards != self.n_shards:
-                raise ValueError("enqueue filter must share n_shards with seen filter")
-            e_out_dir = os.path.join(enqueue.state_dir, f"enq_r{round_no:06d}{tag}")
-            e_keys_dir = os.path.join(e_out_dir, "keys.parquet")
-            os.makedirs(e_keys_dir, exist_ok=True)
-            e_paths = dict(enqueue.shard_paths)
-            e_key_dirs = list(enqueue.key_files)
-            e_bits, e_buckets, e_k = enqueue.n_bits, enqueue.n_buckets, enqueue.k
-        else:
-            e_out_dir = e_keys_dir = ""
-            e_paths, e_key_dirs = {}, []
-            e_bits, e_buckets, e_k = n_bits, n_buckets, k
+        if enqueue.n_shards != self.n_shards:
+            raise ValueError("enqueue filter must share n_shards with seen filter")
+        e_out_dir = os.path.join(enqueue.state_dir, f"enq_r{round_no:06d}{tag}")
+        e_keys_dir = os.path.join(e_out_dir, "keys.parquet")
+        os.makedirs(e_keys_dir, exist_ok=True)
+        e_paths = dict(enqueue.shard_paths)
+        e_key_dirs = list(enqueue.key_files)
+        e_bits, e_buckets, e_k = enqueue.n_bits, enqueue.n_buckets, enqueue.k
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             sid = int(pdf["shard_id"].iloc[0])
@@ -717,44 +709,39 @@ class SeenFilter:
                 shard.bloom_insert(resolved_new)
                 shard.cuckoo_insert(resolved_new)
 
-            # fused E pass (stratified frontier): exact in-flight verdicts
-            # + enqueue/blocked routing for the fresh rows, in-task
+            # fused E pass: exact in-flight verdicts + enqueue/blocked
+            # routing for the fresh rows, in-task
             inflight = np.zeros(n, dtype=bool)
-            blocked = np.zeros(n, dtype=bool)
-            e_new_path = ""
-            e_items = 0
-            blocked_new = np.empty(0, np.int64)
-            if with_enq:
-                e_prev = e_paths.get(sid)
-                e_shard = (
-                    _Shard.load(e_prev)
-                    if e_prev and os.path.exists(e_prev)
-                    else _Shard(e_bits, e_buckets, e_k)
+            e_prev = e_paths.get(sid)
+            e_shard = (
+                _Shard.load(e_prev)
+                if e_prev and os.path.exists(e_prev)
+                else _Shard(e_bits, e_buckets, e_k)
+            )
+            e_new_path = e_prev or ""
+            plain_unseen = ~seen & ~resolved_mask
+            if plain_unseen.any():
+                inflight[plain_unseen] = _already_seen(
+                    e_shard, prb[plain_unseen], e_key_dirs, sid
                 )
-                e_new_path = e_prev or ""
-                plain_unseen = ~seen & ~resolved_mask
-                if plain_unseen.any():
-                    inflight[plain_unseen] = _already_seen(
-                        e_shard, prb[plain_unseen], e_key_dirs, sid
-                    )
-                fresh_mask = plain_unseen & ~inflight
-                blocked = fresh_mask & wb
-                blocked_new = np.unique(prb[blocked])
-                enq_new = np.unique(prb[fresh_mask & ~wb])
-                if blocked_new.size:
-                    # robots-gated at enqueue: terminal — into SEEN, not E
-                    shard.bloom_insert(blocked_new)
-                    shard.cuckoo_insert(blocked_new)
-                if enq_new.size:
-                    e_shard.bloom_insert(enq_new)
-                    e_shard.cuckoo_insert(enq_new)
-                    e_new_path = os.path.join(e_out_dir, f"shard_{sid:05d}.npz")
-                    e_shard.save(e_new_path)
-                    ekp = os.path.join(e_keys_dir, f"part-{sid:05d}.parquet")
-                    tmp = f"{ekp}.tmp-{uuid.uuid4().hex[:8]}"
-                    pd.DataFrame({"url_key": enq_new}).to_parquet(tmp, index=False)
-                    os.replace(tmp, ekp)
-                e_items = e_shard.n_items
+            fresh_mask = plain_unseen & ~inflight
+            blocked = fresh_mask & wb
+            blocked_new = np.unique(prb[blocked])
+            enq_new = np.unique(prb[fresh_mask & ~wb])
+            if blocked_new.size:
+                # robots-gated at enqueue: terminal — into SEEN, not E
+                shard.bloom_insert(blocked_new)
+                shard.cuckoo_insert(blocked_new)
+            if enq_new.size:
+                e_shard.bloom_insert(enq_new)
+                e_shard.cuckoo_insert(enq_new)
+                e_new_path = os.path.join(e_out_dir, f"shard_{sid:05d}.npz")
+                e_shard.save(e_new_path)
+                ekp = os.path.join(e_keys_dir, f"part-{sid:05d}.parquet")
+                tmp = f"{ekp}.tmp-{uuid.uuid4().hex[:8]}"
+                pd.DataFrame({"url_key": enq_new}).to_parquet(tmp, index=False)
+                os.replace(tmp, ekp)
+            e_items = e_shard.n_items
 
             all_new = np.unique(np.concatenate([ins, resolved_new, blocked_new]))
             if all_new.size:
@@ -842,7 +829,6 @@ class SeenFilter:
                 }
             )
 
-        wb_col = block_col if block_col is not None else F.lit(False)
         elig_col = (
             glue_eligible_col if glue_eligible_col is not None else F.lit(False)
         )
@@ -855,7 +841,7 @@ class SeenFilter:
                 probe_df.select(
                     F.col(key_col).alias("url_key"),
                     F.lit(1).alias("role"),
-                    wb_col.cast("boolean").alias("will_block"),
+                    block_col.cast("boolean").alias("will_block"),
                     elig_col.cast("boolean").alias("glue_eligible"),
                 )
             )
@@ -980,38 +966,31 @@ class SeenFilter:
         def part(pred):
             return attached.filter(pred).drop("resolved", "inflight", "blocked")
 
-        if with_enq:
-            e_new_paths = dict(enqueue.shard_paths)
-            e_touched = False
-            for row in stats:
-                if row["e_path"]:
-                    e_new_paths[int(row["shard_id"])] = row["e_path"]
-                    if row["e_path"].startswith(e_out_dir):
-                        e_touched = True
-            new_enq = SeenFilter(
-                state_dir=enqueue.state_dir,
-                n_shards=enqueue.n_shards,
-                n_bits=enqueue.n_bits,
-                n_buckets=enqueue.n_buckets,
-                k=enqueue.k,
-                shard_paths=e_new_paths,
-                key_files=enqueue.key_files + ([e_keys_dir] if e_touched else []),
-            )
-            parts = {
-                "new": part(
-                    ~F.col("resolved") & ~F.col("inflight") & ~F.col("blocked")
-                ),
-                "nonhaz": part(F.col("inflight")),
-                "blocked": part(F.col("blocked")),
-                "resolved": part(F.col("resolved")),
-            }
-            return new_filter, new_glue, new_enq, parts
-
+        e_new_paths = dict(enqueue.shard_paths)
+        e_touched = False
+        for row in stats:
+            if row["e_path"]:
+                e_new_paths[int(row["shard_id"])] = row["e_path"]
+                if row["e_path"].startswith(e_out_dir):
+                    e_touched = True
+        new_enq = SeenFilter(
+            state_dir=enqueue.state_dir,
+            n_shards=enqueue.n_shards,
+            n_bits=enqueue.n_bits,
+            n_buckets=enqueue.n_buckets,
+            k=enqueue.k,
+            shard_paths=e_new_paths,
+            key_files=enqueue.key_files + ([e_keys_dir] if e_touched else []),
+        )
         parts = {
-            "unseen": part(~F.col("resolved")),
+            "new": part(
+                ~F.col("resolved") & ~F.col("inflight") & ~F.col("blocked")
+            ),
+            "nonhaz": part(F.col("inflight")),
+            "blocked": part(F.col("blocked")),
             "resolved": part(F.col("resolved")),
         }
-        return new_filter, new_glue, None, parts
+        return new_filter, new_glue, new_enq, parts
 
     def exact_key_count(self) -> int:
         """Measured size of the seen set: total rows across the tier-3

@@ -1,10 +1,10 @@
 """Stratified (hot/cold) frontier: rank-and-rewrite only the admission
 horizon, never the backlog (VERDICT r1 next-step #3; SURVEY §4.2).
 
-The classic frontier re-sorts and rewrites the WHOLE backlog every
-round — at a 10^10-URL frontier with politeness-bounded admission the
-leftover churn makes every round O(backlog). This module splits the
-frontier per host at a monotone watermark ``W`` over the admission sort
+A frontier kept as one table must re-sort and rewrite the WHOLE backlog
+every round — at a 10^10-URL frontier with politeness-bounded admission
+the leftover churn makes every round O(backlog). This module (the
+engine's only frontier) splits the frontier per host at a monotone watermark ``W`` over the admission sort
 key ``(priority, depth, url)``:
 
 - **hot** = every live row with key ≤ W(host). Small (politeness-horizon
@@ -43,15 +43,15 @@ Round protocol:
   exactly the hot-routed rows, so these are exact, not estimates.
 - **drained collapse**: once Σn_cold == 0 it stays 0 (rows only spill
   while their host has cold rows), so later rounds drop the cold
-  machinery entirely and run at classic cost.
+  machinery entirely: the hot table is then the whole frontier.
 
 Correctness at enqueue (kept exact vs the oracle, see rounds.py):
 robots gating moves to enqueue time (a blocked row is terminal the
 moment it is discovered — same observable facts/seen/trace since the
 oracle blocks it before the next resolve step), and the in-flight
 cycle break (P11) uses the fused ever-enqueued exact filter E
-(seen.insert_and_probe(enqueue=...)) instead of a union over the
-backlog.
+(the ``enqueue`` filter of seen.insert_and_probe) instead of a union
+over the backlog.
 
 The reference has no analog (its frontier is one process's working
 dict, dnsresolver_new.py:214-215); this is the 10^10-scale rehosting
@@ -59,6 +59,8 @@ of the same priority-queue semantics.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
@@ -122,8 +124,15 @@ def live_pred(w_col):
 def read_cold(spark: SparkSession, cold_paths: list[str]) -> DataFrame:
     """All cold deltas as one DataFrame. Explicit schema: no footer
     round-trips; ``hbucket`` is recovered from the partition dirs, so a
-    ``.filter(hbucket.isin(...))`` downstream prunes whole directories."""
-    return spark.read.schema(COLD_SCHEMA).parquet(*cold_paths)
+    ``.filter(hbucket.isin(...))`` downstream prunes whole directories.
+    Each delta is its own partitioned root, and Spark refuses to discover
+    partitions under several roots in one read
+    (CONFLICTING_DIRECTORY_STRUCTURES) — so each root is read alone and
+    the scans are unioned; the filter is pushed into every scan."""
+    return reduce(
+        DataFrame.unionByName,
+        [spark.read.schema(COLD_SCHEMA).parquet(p) for p in cold_paths],
+    )
 
 
 def deficit_obs_exprs(n_buckets: int):
@@ -146,8 +155,8 @@ def deficit_obs_exprs(n_buckets: int):
 
 
 def with_dead_seeds_excluded(rows: DataFrame, dead_seeds: DataFrame | None) -> DataFrame:
-    """Drop rows whose seed is budget-exhausted (CrawlConfig.seed_budget
-    in stratified mode): such rows were demoted to the terminal
+    """Drop rows whose seed is budget-exhausted (CrawlConfig.seed_budget):
+    such rows were demoted to the terminal
     ``budget_exceeded`` class by the exhaustion-round cold sweep
     (rounds.py) and are DEAD in place — the physical cold files are
     append-only, so liveness carries the exclusion. ``dead_seeds`` is

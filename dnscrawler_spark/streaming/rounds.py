@@ -1,15 +1,23 @@
 """The crawl driver: iterative DataFrame rounds with snapshot commits.
 
-One round == one wave of the reference's resolve loop
-(/root/reference/dnscrawler/dnsresolver_new.py:210-234), vectorized over
-every in-flight URL at once (SURVEY §3.3):
+The frontier is stratified (operators/stratified.py): a small per-host
+HOT horizon that politeness ranks, plus an append-only COLD backlog.
+One round runs the body of the reference's resolve loop
+(dnscrawler/dnsresolver_new.py:210-234), vectorized over every
+in-flight URL at once (SURVEY §3.3). The body is ``CrawlEngine._wave``,
+run once over the hot horizon (wave A) and — two_wave, the reference's
+``for i in range(2)`` — once more over wave A's carry band (wave B):
 
-    admitted    = politeness(frontier_r)               # X5/W2
+    admitted    = politeness(rows)                     # X5/W2
     fetched     = admitted ⋈ pages on url_key          # S2
-    facts       = explode(parse(fetched))              # P1-P7, A1/A5
-    candidates  = dedup(edges)                         # A4 (two-struct)
+    candidates  = dedup(edges), robots-gated           # A4, X5 at enqueue
     verdicts    = fused pass: seen ⊕ glue G ⊕ E        # J1/J2/J3/P11
-    frontier_r+1= leftover ∪ retries ∪ new             # SO1/S7
+
+``run_round`` orchestrates the waves:
+
+    hot_r       = hot ∪ replenish(cold)                # deficit hosts only
+    facts       = explode(parse(fetched)) ∪ …          # P1-P7, A1/A5
+    frontier_r+1= route(leftover ∪ retries ∪ new)      # SO1/S7: hot | cold
     seen'       = seen ⊕ insert(fetched ∪ terminal ∪ blocked ∪ resolved)
     commit snapshot r+1 (atomic manifest)              # O2
 
@@ -24,6 +32,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -119,9 +128,10 @@ class CrawlConfig:
     # two-wave zone-cut iteration (W3): the reference runs two waves
     # unconditionally (dnsresolver_new.py:210 `for i in range(2)`), so
     # two-wave is the DEFAULT (VERDICT r2 #4); carry-band discoveries
-    # are fetched again within the same round against the remaining
-    # politeness budget. Single-wave (False) remains available as the
-    # leaner loop (roughly half the per-round plan size).
+    # are fetched again within the same round — a second ``_wave``
+    # against the remaining politeness budget. Single-wave (False)
+    # remains available as the leaner loop (roughly half the per-round
+    # plan size).
     two_wave: bool = True
     # pipelined writes: the two output-only tables (fetched, facts) are
     # written in background threads OVERLAPPED with the next round's
@@ -130,28 +140,55 @@ class CrawlConfig:
     # round — a crash replays at most two rounds instead of one. All
     # metrics are observation-based and final before the round returns.
     pipeline_writes: bool = False
-    # stratified (hot/cold) frontier (operators/stratified.py): politeness
-    # ranks only the hot admission horizon; the backlog lives in
-    # append-only cold deltas pulled on demand (deficit-driven, bucket-
-    # pruned). Admission decisions are provably identical to classic /
-    # the oracle; robots gating moves to enqueue time and the in-flight
-    # cycle break (P11) runs through the fused ever-enqueued exact
-    # filter E instead of a full-backlog union. The per-round cost
-    # becomes O(horizon + new rows), not O(backlog) — the 10^10 path.
-    stratified: bool = False
+    # The frontier is always stratified (hot/cold, operators/
+    # stratified.py): politeness ranks only the hot admission horizon;
+    # the backlog lives in append-only cold deltas pulled on demand.
+    # The field remains only so existing callers that pass
+    # stratified=True keep working; any other value is rejected.
+    stratified: bool = True
     replenish_chunk: int = 4  # pull chunk×ceil(burst) per deficit host
     cold_buckets: int = 64  # hbucket partitions for cold deltas
     cold_compact_every: int = 16  # compact when delta count exceeds this
     # token-delta compaction bound (the dynamic politeness state is
     # written as O(admitted hosts) per-round deltas, merged on read)
     state_compact_every: int = 16
-    # stratified fast path: when the round's active-host count (known
+    # policy fast path: when the round's active-host count (known
     # free from the previous round's queue_state observation) is at most
     # this, the politeness policy is semi-join-PRUNED to the active hosts
     # and broadcast; above it (e.g. the all-hosts round 0 of a 10^10
     # crawl) the round falls back to a plain shuffle-hash join — the
     # host dimension itself is NEVER broadcast (VERDICT r2 #1)
     policy_broadcast_max: int = 200_000
+
+
+@dataclass
+class _Wave:
+    """What one ``CrawlEngine._wave`` pass hands its round: the frontier
+    flows, the fact sources, the count Observations, the filters after
+    its fused pass, and the frames to release after the round's writes."""
+
+    sfx: str  # Observation-name suffix: "" (wave A) or "_b" (wave B)
+    admitted: DataFrame
+    leftover: DataFrame
+    retries: DataFrame
+    new: DataFrame  # fresh candidates to enqueue
+    debits: DataFrame  # post-debit token rows of the admitted hosts
+    fetched: DataFrame
+    glue_new: DataFrame
+    resolved: DataFrame  # glue short-circuit rows
+    terminal: DataFrame
+    nonhaz: DataFrame  # candidates already in flight
+    blocked: DataFrame  # robots-blocked at admission
+    blocked_cand: DataFrame  # robots-blocked at enqueue
+    qmin: DataFrame
+    obs: dict[str, Observation]  # blocked / fetched / term / qmin counts
+    seen: SeenFilter
+    glue: SeenFilter
+    enq: SeenFilter
+    cached: list[DataFrame]
+
+    def count(self, key: str, field: str = "n") -> int:
+        return int(self.obs[key].get[field] or 0)
 
 
 class CrawlEngine:
@@ -164,6 +201,11 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
+        if self.cfg.stratified is not True:
+            raise ValueError(
+                "CrawlConfig.stratified must be True: the stratified "
+                "hot/cold frontier is the only frontier"
+            )
         self.store = SnapshotStore(root)
         self.root = root
         # pipelined-write state: (futures, snapshot, frames-to-unpersist,
@@ -192,104 +234,89 @@ class CrawlEngine:
 
     # -- lifecycle ----------------------------------------------------------
     def start(self, seed_urls: list[str] | DataFrame, host_state: DataFrame) -> Snapshot:
-        """Round-0 snapshot: seeded frontier + initial host_state +
-        empty seen/glue/facts. ``seed_urls`` may be a list (small runs,
+        """Round-0 snapshot: every seed in the cold backlog, the initial
+        queue_state + host_state, E seeded with the seeds, empty
+        seen/glue filters. ``seed_urls`` may be a list (small runs,
         the reference's seed-file shape) or a DataFrame with a ``url``
         column (scale path — a 10^10-row seed set never sees the
         driver)."""
         cfg = self.cfg
-        obs = None
         if isinstance(seed_urls, DataFrame):
             fr = seed_frontier_from_df(seed_urls, cfg.n_salts)
-            if not cfg.stratified:
-                obs = Observation("seed_n")
-                fr = fr.observe(obs, F.count(F.lit(1)).alias("n"))
         else:
             fr = seed_frontier(self.spark, seed_urls, cfg.n_salts)
-            n_seeds = len(seed_urls)
         snap = Snapshot(snapshot_id="snap-000000", parent_id=None, round=0)
-        if cfg.stratified:
-            # Seeds go to COLD (W = -inf): a 10^10-row seed set is never
-            # globally sorted — round 1 pulls per-host chunks on demand.
-            # Robots gating happens here (at enqueue); blocked seeds ride
-            # the pending_blocked table into round 0's blocked flow, so
-            # they are facts+seen BEFORE round 0's candidates are probed
-            # — the oracle's round-0 robots phase, exactly.
-            # The policy side is pruned to ROBOTS-ACTIVE hosts (only they
-            # can block) and shuffle-hash-joined — a 10^10-row seed set
-            # over 10^8 hosts must never see a host-dimension broadcast
-            # (VERDICT r2 #1).
-            robots_pol = pol.robots_policy(host_state)
-            frp = fr.join(robots_pol.hint("shuffle_hash"), "host", "left")
-            bp = pol.robots_block_pred()
-            pending_blocked = frp.filter(bp).select(*FRONTIER_COLS)
-            clean = frp.filter(~bp).select(*FRONTIER_COLS).persist()
-            cold0 = clean.withColumn(
-                "hbucket", strat.hbucket_col(F.col("host"), cfg.cold_buckets)
+        # Seeds go to COLD (W = -inf): a 10^10-row seed set is never
+        # globally sorted — round 1 pulls per-host chunks on demand.
+        # Robots gating happens here (at enqueue); blocked seeds ride
+        # the pending_blocked table into round 0's blocked flow, so
+        # they are facts+seen BEFORE round 0's candidates are probed
+        # — the oracle's round-0 robots phase, exactly.
+        # The policy side is pruned to ROBOTS-ACTIVE hosts (only they
+        # can block) and shuffle-hash-joined — a 10^10-row seed set
+        # over 10^8 hosts must never see a host-dimension broadcast
+        # (VERDICT r2 #1).
+        robots_pol = pol.robots_policy(host_state)
+        frp = fr.join(robots_pol.hint("shuffle_hash"), "host", "left")
+        bp = pol.robots_block_pred()
+        pending_blocked = frp.filter(bp).select(*FRONTIER_COLS)
+        clean = frp.filter(~bp).select(*FRONTIER_COLS).persist()
+        cold0 = clean.withColumn(
+            "hbucket", strat.hbucket_col(F.col("host"), cfg.cold_buckets)
+        )
+        obs_cold = Observation("seed_cold_n")
+        cold0 = cold0.observe(obs_cold, F.count(F.lit(1)).alias("n"))
+        # the cold write runs FIRST and alone: it materializes the
+        # `clean` cache every other round-0 job reads (a concurrent
+        # launch would race the cache and compute `clean` N times —
+        # the r5 fork-storm failure mode). The remaining writes are
+        # independent of each other, so they run overlapped in a
+        # small pool (guide §2.6: actions are only sequential because
+        # the driver calls them sequentially) — start() previously
+        # paid ~6 serialized job latencies here.
+        cold_path = self.store.write_table(
+            cold0, 0, "frontier_cold", partition_by=["hbucket"]
+        )
+        qs0 = strat.initial_queue_state(clean, host_state, cfg.replenish_chunk)
+        obs_qs0 = Observation("seed_qs")
+        qs0 = qs0.observe(obs_qs0, *strat.deficit_obs_exprs(cfg.cold_buckets))
+        n_small = max(1, (cfg.partitions or 8) // 8)
+        enq0 = SeenFilter(
+            state_dir=os.path.join(self.root, "enq_state"),
+            n_shards=cfg.seen_shards,
+            n_bits=cfg.seen_bits,
+            n_buckets=cfg.seen_buckets,
+        )
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            fut_qs = ex.submit(
+                self.store.write_table, qs0.coalesce(n_small), 0, "queue_state"
             )
-            obs_cold = Observation("seed_cold_n")
-            cold0 = cold0.observe(obs_cold, F.count(F.lit(1)).alias("n"))
-            # the cold write runs FIRST and alone: it materializes the
-            # `clean` cache every other round-0 job reads (a concurrent
-            # launch would race the cache and compute `clean` N times —
-            # the r5 fork-storm failure mode). The remaining writes are
-            # independent of each other, so they run overlapped in a
-            # small pool (guide §2.6: actions are only sequential because
-            # the driver calls them sequentially) — start() previously
-            # paid ~6 serialized job latencies here.
-            cold_path = self.store.write_table(
-                cold0, 0, "frontier_cold", partition_by=["hbucket"]
+            fut_fr = ex.submit(
+                self.store.write_table,
+                self.spark.createDataFrame([], FRONTIER_SCHEMA), 0, "frontier",
             )
-            qs0 = strat.initial_queue_state(clean, host_state, cfg.replenish_chunk)
-            obs_qs0 = Observation("seed_qs")
-            qs0 = qs0.observe(obs_qs0, *strat.deficit_obs_exprs(cfg.cold_buckets))
-            n_small = max(1, (cfg.partitions or 8) // 8)
-            enq0 = SeenFilter(
-                state_dir=os.path.join(self.root, "enq_state"),
-                n_shards=cfg.seen_shards,
-                n_bits=cfg.seen_bits,
-                n_buckets=cfg.seen_buckets,
+            fut_pb = ex.submit(
+                self.store.write_table, pending_blocked, 0, "pending_blocked"
             )
-            with ThreadPoolExecutor(max_workers=4) as ex:
-                fut_qs = ex.submit(
-                    self.store.write_table, qs0.coalesce(n_small), 0, "queue_state"
-                )
-                fut_fr = ex.submit(
-                    self.store.write_table,
-                    self.spark.createDataFrame([], FRONTIER_SCHEMA), 0, "frontier",
-                )
-                fut_pb = ex.submit(
-                    self.store.write_table, pending_blocked, 0, "pending_blocked"
-                )
-                fut_hs = ex.submit(
-                    self.store.write_table, host_state, 0, "host_state"
-                )
-                enq = enq0.insert(clean.select("url_key"), 0)
-                snap.tables["queue_state"] = fut_qs.result()
-                snap.tables["frontier"] = fut_fr.result()
-                snap.tables["pending_blocked"] = fut_pb.result()
-                snap.tables["host_state"] = fut_hs.result()
-            n_seeds = int(obs_cold.get["n"])
-            clean.unpersist()
-            snap.aux = {
-                "cold_paths": [cold_path] if n_seeds else [],
-                "enqueued": enq.to_manifest(),
-                "deficit_buckets": sorted(
-                    int(b) for b in (obs_qs0.get["dbuckets"] or [])
-                ),
-                "n_active_hosts": int(obs_qs0.get["nactive"] or 0),
-                "token_paths": [],
-            }
-        else:
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_hs = ex.submit(
-                    self.store.write_table, host_state, 0, "host_state"
-                )
-                snap.tables["frontier"] = self.store.write_table(fr, 0, "frontier")
-                snap.tables["host_state"] = fut_hs.result()
-            snap.aux = {"token_paths": []}
-            if obs is not None:
-                n_seeds = int(obs.get["n"])
+            fut_hs = ex.submit(
+                self.store.write_table, host_state, 0, "host_state"
+            )
+            enq = enq0.insert(clean.select("url_key"), 0)
+            snap.tables["queue_state"] = fut_qs.result()
+            snap.tables["frontier"] = fut_fr.result()
+            snap.tables["pending_blocked"] = fut_pb.result()
+            snap.tables["host_state"] = fut_hs.result()
+        n_seeds = int(obs_cold.get["n"])
+        clean.unpersist()
+        snap.aux = {
+            "cold_paths": [cold_path] if n_seeds else [],
+            "enqueued": enq.to_manifest(),
+            "deficit_buckets": sorted(
+                int(b) for b in (obs_qs0.get["dbuckets"] or [])
+            ),
+            "n_active_hosts": int(obs_qs0.get["nactive"] or 0),
+            "token_paths": [],
+        }
         seen = SeenFilter(
             state_dir=os.path.join(self.root, "seen_state"),
             n_shards=cfg.seen_shards,
@@ -305,12 +332,12 @@ class CrawlEngine:
             n_bits=cfg.seen_bits,
             n_buckets=cfg.seen_buckets,
         ).to_manifest()
-        snap.metrics = {"n_frontier": n_seeds, "done": False}
-        if cfg.stratified:
-            # seeds all went cold; run_round uses this to skip the cold
-            # machinery entirely once the backlog drains (absorbing:
-            # route() only spills to cold while n_cold > 0)
-            snap.metrics["n_cold_backlog"] = n_seeds
+        # seeds all went cold; run_round uses n_cold_backlog to skip the
+        # cold machinery entirely once the backlog drains (absorbing:
+        # route() only spills to cold while n_cold > 0)
+        snap.metrics = {
+            "n_frontier": n_seeds, "done": False, "n_cold_backlog": n_seeds,
+        }
         self.store.commit(snap)
         return snap
 
@@ -359,20 +386,16 @@ class CrawlEngine:
 
     # -- one round ------------------------------------------------------------
     def run_round(self, snap: Snapshot) -> Snapshot:
-        """One crawl wave. All round metrics piggyback on the snapshot
-        writes via the Observation API (CollectMetrics nodes) — the round
-        runs NO standalone count() jobs, so per-round fixed cost stays
-        flat as parallelism grows (the north_rule scaling criterion)."""
+        """One crawl round: ``_wave`` over the hot horizon (wave A), then
+        — two_wave — ``_wave`` again over wave A's carry band (wave B);
+        the waves' flows are routed to the next hot/cold frontier and
+        committed. All round metrics piggyback on the snapshot writes
+        via the Observation API (CollectMetrics nodes) — the round runs
+        NO standalone count() jobs, so per-round fixed cost stays flat
+        as parallelism grows (the north_rule scaling criterion)."""
         spark, cfg, store = self.spark, self.cfg, self.store
         r = snap.round
         t0 = time.monotonic()
-        trace = os.environ.get("SPARK_GRAFT_ROUND_TRACE") == "1"
-
-        def tick(label, _last=[t0]):
-            if trace:
-                now = time.monotonic()
-                print(f"  [r{r}] {label}: +{now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
 
         frontier = store.read_table(spark, snap, "frontier", FRONTIER_SCHEMA)
         # host_state is the STATIC policy dimension — written once at
@@ -398,10 +421,11 @@ class CrawlEngine:
         # per-round "glue" table is an append-only audit delta of the
         # round's discovered (url_key, url) pairs.
         glue_f = SeenFilter.from_manifest(snap.aux["glue"])
+        enq = SeenFilter.from_manifest(snap.aux["enqueued"])
 
         # per-seed budget state (run/run.py:59 analog): the exhausted-seed
         # dimension is read up front — replenish pulls and cold liveness
-        # must exclude dead seeds' rows (stratified). Tiny by definition.
+        # must exclude dead seeds' rows. Tiny by definition.
         over_budget = None
         seed_state = None
         exhausted = None
@@ -413,12 +437,11 @@ class CrawlEngine:
                 F.col("n_fetched") >= cfg.seed_budget
             ).select("seed").persist()
 
-        # stratified frontier: `frontier` is the HOT horizon only; pull
-        # per-host chunks from cold for any host that could under-admit
-        # (deficit-driven replenish, bucket-pruned cold scan), then rank
-        # hot exactly as classic ranks the whole backlog — provably the
-        # same admission set (operators/stratified.py invariants).
-        enq = None
+        # `frontier` is the HOT horizon only; pull per-host chunks from
+        # cold for any host that could under-admit (deficit-driven
+        # replenish, bucket-pruned cold scan), then rank hot — provably
+        # the full queue's admission set (operators/stratified.py
+        # invariants).
         qs = None
         cold_paths: list[str] = []
         strat_persisted: list = []
@@ -426,10 +449,8 @@ class CrawlEngine:
         # (summed from last round's queue_state observation). Once false
         # it stays false — route() only spills while n_cold > 0 — so the
         # round drops ALL cold machinery (no replenish job, no routing
-        # joins, no cold/queue_state writes) and runs at classic cost.
-        cold_active = bool(snap.metrics.get("n_cold_backlog", 1)) if cfg.stratified else False
-        if cfg.stratified:
-            enq = SeenFilter.from_manifest(snap.aux["enqueued"])
+        # joins, no cold/queue_state writes).
+        cold_active = bool(snap.metrics.get("n_cold_backlog", 1))
         if cold_active:
             qs = store.read_table(spark, snap, "queue_state", strat.QUEUE_STATE_SCHEMA)
             cold_paths = list(snap.aux.get("cold_paths", []))
@@ -446,30 +467,26 @@ class CrawlEngine:
                 snap.aux.get("deficit_buckets", []),
                 dead_seeds=exhausted,
             )
-            tick("replenish")
 
         # per-seed budget (run/run.py:59 analog): demote every frontier
         # row of an exhausted seed before politeness. Broadcast-semi on
         # the tiny exhausted-seed dim; zero overhead when budget unset.
-        # Hot rows (incl. this round's replenish pulls) demote here; in
-        # stratified mode the COLD backlog of a newly exhausted seed is
-        # demoted by a one-time exhaustion-round sweep below, and rows
-        # discovered after exhaustion ride the pending_demote table into
-        # the next round — together these reproduce the oracle's
-        # whole-frontier round-start demotion EXACTLY, without touching
-        # cold on budget-quiet rounds.
+        # Hot rows (incl. this round's replenish pulls) demote here; the
+        # COLD backlog of a newly exhausted seed is demoted by a one-time
+        # exhaustion-round sweep below, and rows discovered after
+        # exhaustion ride the pending_demote table into the next round —
+        # together these reproduce the oracle's whole-frontier
+        # round-start demotion EXACTLY, without touching cold on
+        # budget-quiet rounds.
         live_dead = None
         if cfg.seed_budget is not None:
             over_budget = frontier.join(
                 F.broadcast(exhausted), "seed", "left_semi"
             )
             frontier = frontier.join(F.broadcast(exhausted), "seed", "left_anti")
-            if cfg.stratified:
-                pd_tbl = store.read_table(
-                    spark, snap, "pending_demote", FRONTIER_SCHEMA
-                )
-                if pd_tbl is not None:
-                    over_budget = over_budget.unionByName(pd_tbl)
+            pd_tbl = store.read_table(spark, snap, "pending_demote", FRONTIER_SCHEMA)
+            if pd_tbl is not None:
+                over_budget = over_budget.unionByName(pd_tbl)
             if cold_active and snap.aux.get("n_exhausted", 0) > snap.aux.get(
                 "n_swept", 0
             ):
@@ -508,17 +525,16 @@ class CrawlEngine:
                 )
             over_budget = over_budget.persist()
 
-        frontier = repartition_by_host(frontier)
         # Politeness policy join strategy (VERDICT r2 #1 — the host
         # dimension is NEVER broadcast whole):
-        # - stratified with a small active-host set (known free from the
-        #   previous round's queue_state observation): semi-join-prune
-        #   the policy to the active hosts, then broadcast the pruned
+        # - with a small active-host set (known free from the previous
+        #   round's queue_state observation): semi-join-prune the policy
+        #   to the active hosts, then broadcast the pruned
         #   (horizon-sized) slice;
-        # - otherwise (classic, drained, or an all-hosts round like
-        #   round 0 of a 10^10 crawl): plain shuffle-hash join — the
-        #   frontier side is already hash-partitioned.
-        n_active = snap.aux.get("n_active_hosts") if cfg.stratified else None
+        # - otherwise (drained, or an all-hosts round like round 0 of a
+        #   10^10 crawl): plain shuffle-hash join — the frontier side is
+        #   already hash-partitioned.
+        n_active = snap.aux.get("n_active_hosts")
         if (
             cold_active
             and n_active is not None
@@ -529,192 +545,31 @@ class CrawlEngine:
             prepared = F.broadcast(pol.prepare_policy(pruned, tokens, r))
         else:
             prepared = pol.prepare_policy(host_state, tokens, r).hint("shuffle_hash")
-        # ONE eager checkpoint pins the whole politeness decision (r6,
-        # guide §2.4/§5): admitted/leftover/blocked/debits become plain
-        # filters/aggregations of an in-memory LEAF, so no downstream
-        # job (fetch, fused pass, facts, frontier write) re-plans — or
-        # re-builds the broadcasts of — the frontier/policy lineage.
-        # Replaces three persists whose caches each still carried the
-        # full politeness plan into every consumer.
-        decided = pol.admit_decided(frontier, prepared).localCheckpoint()
-        admitted, leftover, blocked, debits = pol.split_decided(decided, r)
-        # debits still has 2 consumers in a two-wave round (wave-B
+        # robots-blocked seeds parked by start() join round 0's blocked
+        # flow (facts + seen BEFORE this round's candidates are probed —
+        # the oracle's round-0 robots phase, exactly). All other rows were
+        # robots-gated at enqueue, so the politeness robots branch is
+        # empty by construction.
+        wave_a = self._wave(
+            r, "", frontier, prepared, host_state, seen, glue_f, enq,
+            pending_blocked=store.read_table(
+                spark, snap, "pending_blocked", FRONTIER_SCHEMA
+            ),
+            over_budget=over_budget,
+        )
+        # wave A's debits have 2 consumers in a two-wave round (wave-B
         # apply_debits broadcast + the host_tokens delta write) — the
         # aggregation over the leaf is cheap but the broadcast build is
         # not free; keep it cached
-        debits = debits.persist()
-        if cfg.stratified:
-            # robots-blocked seeds parked by start() join round 0's
-            # blocked flow (facts + seen BEFORE this round's candidates
-            # are probed — the oracle's round-0 robots phase, exactly).
-            # All other rows were robots-gated at enqueue, so the
-            # politeness robots branch is empty by construction.
-            pb = store.read_table(spark, snap, "pending_blocked", FRONTIER_SCHEMA)
-            if pb is not None:
-                blocked = blocked.unionByName(pb)
-        obs_blocked = Observation(f"blocked_r{r}")
-        blocked = blocked.observe(obs_blocked, F.count(F.lit(1)).alias("n")).persist()
-
-        def run_fetch(adm, obs):
-            """Fetch + verify one admitted wave; returns (fetched persisted
-            with the count/bad observation attached, misses, enriched-cache
-            handle or None)."""
-            if cfg.fetch_mode == "synthetic":
-                # fetch + payload verification fused: bytes stay in the
-                # stage; the enriched frame is persisted ONCE so the
-                # hit/miss split reads the cache instead of re-running the
-                # fetch per branch. Explicit fan-out first: AQE sizes
-                # partitions by BYTES, and a frontier row is ~200 B while
-                # fetching it costs ~1 ms of Python — size-based coalescing
-                # would run the whole fetch on 1-2 cores. Fixed-width
-                # repartition is exempt from AQE coalescing, guaranteeing
-                # one fetch slice per task slot.
-                fan_out = adm.repartition(cfg.partitions * 2)
-                # localCheckpoint (eager), not persist: the fetch is the
-                # round's expensive Python stage and EVERY downstream job
-                # re-plans through it (seen_keys unions, expansion, facts,
-                # fetched write, glue write). Persisted, the four seen_keys
-                # branches raced to materialize it concurrently inside the
-                # fused pass (measured: the fetch UDF ran 3-4x in round 0's
-                # fused-pass job) and the pipelined writes re-ran it when
-                # cache substitution failed on the deep facts plan. The
-                # eager checkpoint runs the fetch exactly once, right here,
-                # and hands every consumer a leaf. Recovery at cluster
-                # scale is round-granular via the snapshot store (resume),
-                # not task-lineage replay — same tradeoff as the wave
-                # boundary checkpoint below.
-                enr = X.fetch_synthetic(
-                    fan_out, cfg.gen_seed, cfg.n_pages, cfg.n_hosts, cfg.px_scale,
-                    verify=cfg.verify_payloads,
-                ).localCheckpoint()
-                f = enr.filter(F.col("is_hit")).drop(
-                    "is_hit", "qmin_fallback", "fail_code"
-                )
-                m = enr.filter(~F.col("is_hit")).select(
-                    *FRONTIER_COLS, "qmin_fallback", "fail_code"
-                )
-                has_ok = True
-            else:
-                # same materialization boundary as the synthetic path:
-                # the corpus join runs exactly once and every consumer
-                # (hit/miss split, seen_keys unions, facts, writes) plans
-                # from the in-memory leaf instead of re-running the join.
-                enr = X.fetch(adm, self.pages_keyed).localCheckpoint()
-                f = enr.filter(F.col("is_hit")).drop("is_hit")
-                m = enr.filter(~F.col("is_hit")).select(*FRONTIER_COLS)
-                if cfg.verify_payloads:
-                    f = X.verify_payloads(f, cfg.gen_seed, cfg.px_scale)
-                has_ok = cfg.verify_payloads
-            f = f.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                (
-                    F.sum((~F.col("payload_ok")).cast("long")) if has_ok else F.lit(0)
-                ).alias("bad"),
-            ).persist()
-            return f, m, enr
-
-        obs_fetched = Observation(f"fetched_r{r}")
-        fetched, misses, enriched = run_fetch(admitted, obs_fetched)
-        retries, terminal, qmin = X.classify_misses(misses, cfg.gen_seed)
-        # count observations attach to the source frames, NOT the facts
-        # write: they fire during the fused pass (whose seen_keys union
-        # materializes these frames), so every metric is known before any
-        # output-table write — a requirement for pipelined writes
-        obs_term = Observation(f"term_r{r}")
-        obs_qmin = Observation(f"qmin_r{r}")
-        retries = retries.persist()
-        terminal = terminal.observe(obs_term, F.count(F.lit(1)).alias("n")).persist()
-        qmin = qmin.observe(obs_qmin, F.count(F.lit(1)).alias("n")).persist()
-
-        glue_new = X.new_glue(fetched)
-        candidates = X.expand_candidates(
-            fetched, cfg.n_salts, r + 1, extra_edges=qmin,
-        )
-
-        seen_keys = (
-            fetched.select("url_key")
-            .union(terminal.select("url_key"))
-            .union(blocked.select("url_key"))
-            # the minimized-form url itself is done (requery enqueued)
-            .union(qmin.select(F.col("orig_url_key").alias("url_key")))
-        )
-        if over_budget is not None:
-            seen_keys = seen_keys.union(over_budget.select("url_key"))
-        # ONE fused applyInPandas pass: per shard, insert this round's
-        # keys (npz + exact-key tier rewrite) then probe the expansion
-        # candidates against the updated shard. Glue-hit candidates are
-        # resolve rows (the glue short-circuit, dnsresolver_new.py:
-        # 125-126): an unseen glue hit is resolved from the glue payload
-        # — facts now, seen now, never fetched. The stats collect is also
-        # the action that materializes the fetched/blocked caches.
-        tick("plan")
-
-        def with_will_block(cand):
-            """Robots verdict at enqueue time (stratified): same predicate
-            politeness applies, computed once per candidate — blocked
-            candidates become terminal inside the fused pass and never
-            enter the frontier. The join is against the robots-ACTIVE
-            policy slice only (hosts without disallow rules can never
-            block — null-safe predicate), shuffle-hash: candidate hosts
-            are unknown in advance, and a host-dimension broadcast is
-            exactly the 10^8-host scale-killer (VERDICT r2 #1)."""
-            robots_pol = pol.robots_policy(host_state).hint("shuffle_hash")
-            return (
-                cand.join(robots_pol, "host", "left")
-                .withColumn("will_block", pol.robots_block_pred())
-                .drop("robots_disallow", "robots_fetched")
-            )
-
-        # the probe frame (candidates + robots verdict in stratified
-        # mode) is read by the fused pass AND by every part's verdict
-        # join afterwards — persist it so the expansion shuffle and the
-        # robots join run once per round
-        probe_cand = (
-            with_will_block(candidates) if cfg.stratified else candidates
-        ).persist()
-        unseen = None
-        blocked_cand = None
-        enq_final = None
-        if cfg.stratified:
-            # the fused pass also probes/updates the ever-enqueued filter
-            # E: the in-flight cycle break (P11) without touching the
-            # backlog — unseen ∧ enqueued ⇔ in-flight, since rows only
-            # leave the frontier by becoming seen
-            seen2, glue2_f, enq2, parts = seen.insert_and_probe(
-                seen_keys, probe_cand, r,
-                glue=glue_f, glue_insert_keys=glue_new,
-                glue_eligible_col=F.col("glue_eligible"),
-                enqueue=enq, block_col=F.col("will_block"),
-            )
-            tick("fused-pass collect (fetch+dedup materialized)")
-            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1).persist()
-            nonhaz = X.finalize_candidates(parts["nonhaz"], r + 1)
-            new_rows = X.finalize_candidates(parts["new"], r + 1)
-            # blocked-at-enqueue counts ride the fused pass's stat rows
-            # (an Observation here would block on the pipelined facts
-            # write, serializing the write overlap)
-            blocked_cand = X.finalize_candidates(parts["blocked"], r + 1)
-            enq_final = enq2
-        else:
-            seen2, glue2_f, _, parts = seen.insert_and_probe(
-                seen_keys, probe_cand, r,
-                glue=glue_f, glue_insert_keys=glue_new,
-                glue_eligible_col=F.col("glue_eligible"),
-            )
-            tick("fused-pass collect (fetch+dedup materialized)")
-            unseen = X.finalize_candidates(parts["unseen"], r + 1).persist()
-            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1).persist()
-            inflight = leftover.select("url_key").union(retries.select("url_key"))
-            nonhaz = unseen.join(inflight, "url_key", "left_semi")
-            new_rows = unseen.join(inflight, "url_key", "left_anti")
+        wave_a.debits.persist()
+        waves = [wave_a]
 
         # ---- wave B (W3, dnsresolver_new.py:210 `for i in range(2)`):
         # the freshly learned zone-cut set (carry-band discoveries) is
         # fetched again within the SAME round against the remaining
-        # politeness budget. Opt-in (cfg.two_wave); wave-A-only otherwise.
-        wave_b = None
-        seen_final, glue_final_f = seen2, glue2_f
+        # politeness budget (cfg.two_wave).
+        new_rows = wave_a.new
+        n_carry = 0
         if cfg.two_wave:
             # localCheckpoint = the wave boundary: materializes the wave-A
             # verdicts AND truncates their lineage, so wave-B plans start
@@ -739,186 +594,102 @@ class CrawlEngine:
             # always-correct path (ADVICE r4)
             nc_val = _obs_get_timeout(obs_carry, "nc")
             n_carry = -1 if nc_val is None else int(nc_val or 0)
-        if cfg.two_wave and n_carry == 0:
             # drained-carry fast path (VERDICT r3 #8): with ZERO carry-band
             # discoveries, wave B would admit nothing — every wave-B frame
-            # is empty and the merge paths below reduce to the single-wave
-            # ones, so the entire wave-B machinery (politeness pass, fetch,
-            # fused seen pass, ~half the round's stages) is skipped with
-            # bit-identical results. The carry count rides the wave-boundary
-            # localCheckpoint's Observation (fires during materialization),
-            # so the decision costs ZERO extra jobs; at 10^10 scale late
-            # rounds are carry-sparse, so this halves their fixed cost too.
-            tick("wave-B skipped (carry band empty)")
-        elif cfg.two_wave:
-            # wave-B policy: carry targets can be hosts outside this
-            # round's active set, so the prepared view starts from the
-            # full dimension with wave-A debits overriding the token
-            # balances (no refill between waves). The carry band is
-            # materialized (it filters the wave-boundary checkpoint) and
-            # its size is KNOWN (n_carry rode the checkpoint's
-            # Observation): when it is horizon-sized, semi-join-prune the
-            # policy to the carry hosts and broadcast the pruned slice —
-            # one host-dimension scan, no shuffle of the dimension, same
-            # admissions (absent hosts take the same default-budget path
-            # either way). Past the threshold, shuffle-hash as before —
-            # the host dimension itself is never broadcast whole
-            # (VERDICT r2 #1).
-            if 0 < n_carry <= cfg.policy_broadcast_max:
-                carry_hosts = carry_rows.select("host").distinct()
-                pruned_pol = host_state.join(
-                    F.broadcast(carry_hosts), "host", "left_semi"
-                )
-                prepared_b = F.broadcast(
-                    pol.apply_debits(pol.prepare_policy(pruned_pol, tokens, r), debits)
-                )
-            else:
-                prepared_b = pol.apply_debits(
-                    pol.prepare_policy(host_state, tokens, r), debits
-                ).hint("shuffle_hash")
-            # same decision-leaf checkpoint as wave A (r6)
-            decided_b = pol.admit_decided(
-                repartition_by_host(carry_rows), prepared_b
-            ).localCheckpoint()
-            admitted_b, leftover_b, blocked_b, debits_b = pol.split_decided(
-                decided_b, r
-            )
-            obs_fetched_b = Observation(f"fetched_b_r{r}")
-            fetched_b, misses_b, enriched_b = run_fetch(admitted_b, obs_fetched_b)
-            retries_b, terminal_b, qmin_b = X.classify_misses(misses_b, cfg.gen_seed)
-            obs_term_b = Observation(f"term_b_r{r}")
-            obs_qmin_b = Observation(f"qmin_b_r{r}")
-            obs_blocked_b = Observation(f"blocked_b_r{r}")
-            blocked_b = blocked_b.observe(
-                obs_blocked_b, F.count(F.lit(1)).alias("n")
-            ).persist()
-            retries_b = retries_b.persist()
-            terminal_b = terminal_b.observe(
-                obs_term_b, F.count(F.lit(1)).alias("n")
-            ).persist()
-            qmin_b = qmin_b.observe(obs_qmin_b, F.count(F.lit(1)).alias("n")).persist()
-            glue_new_b = X.new_glue(fetched_b)
-            candidates_b = X.expand_candidates(
-                fetched_b, cfg.n_salts, r + 1, extra_edges=qmin_b,
-            )
-            probe_cand_b = (
-                with_will_block(candidates_b) if cfg.stratified else candidates_b
-            ).persist()
-            seen_keys_b = (
-                fetched_b.select("url_key")
-                .union(terminal_b.select("url_key"))
-                .union(blocked_b.select("url_key"))
-                .union(qmin_b.select(F.col("orig_url_key").alias("url_key")))
-            )
-            blocked_cand_b = None
-            unseen_b = None
-            if cfg.stratified:
+            # is empty and the merges below reduce to the single-wave ones,
+            # so wave B (politeness pass, fetch, fused seen pass, ~half the
+            # round's stages) is skipped with bit-identical results. The
+            # carry count rides the wave-boundary localCheckpoint's
+            # Observation (fires during materialization), so the decision
+            # costs ZERO extra jobs; at 10^10 scale late rounds are
+            # carry-sparse, so this halves their fixed cost too.
+            if n_carry != 0:
+                # wave-B policy: carry targets can be hosts outside this
+                # round's active set, so the prepared view starts from the
+                # full dimension with wave-A debits overriding the token
+                # balances (no refill between waves). The carry band is
+                # materialized (it filters the wave-boundary checkpoint)
+                # and its size is KNOWN: when it is horizon-sized,
+                # semi-join-prune the policy to the carry hosts and
+                # broadcast the pruned slice — one host-dimension scan, no
+                # shuffle of the dimension, same admissions (absent hosts
+                # take the same default-budget path either way). Past the
+                # threshold, shuffle-hash — the host dimension itself is
+                # never broadcast whole (VERDICT r2 #1).
+                if 0 < n_carry <= cfg.policy_broadcast_max:
+                    carry_hosts = carry_rows.select("host").distinct()
+                    pruned_pol = host_state.join(
+                        F.broadcast(carry_hosts), "host", "left_semi"
+                    )
+                    carry_policy = F.broadcast(
+                        pol.apply_debits(
+                            pol.prepare_policy(pruned_pol, tokens, r), wave_a.debits
+                        )
+                    )
+                else:
+                    carry_policy = pol.apply_debits(
+                        pol.prepare_policy(host_state, tokens, r), wave_a.debits
+                    ).hint("shuffle_hash")
                 # E already holds wave-A's fresh rows (inserted in the
                 # wave-A pass), so the exact in-flight set here is the
                 # oracle's inflight2 = inflight ∪ rest ∪ leftover_b ∪
                 # retries_b — no unions needed. G likewise already holds
                 # wave-A's glue; wave-B's discoveries insert here.
-                seen_final, glue_final_f, enq_b, parts_b = seen2.insert_and_probe(
-                    seen_keys_b, probe_cand_b, r, tag="-b",
-                    glue=glue2_f, glue_insert_keys=glue_new_b,
-                    glue_eligible_col=F.col("glue_eligible"),
-                    enqueue=enq2, block_col=F.col("will_block"),
-                )
-                glue_resolved_b = X.finalize_candidates(
-                    parts_b["resolved"], r + 1
-                ).persist()
-                nonhaz_b = X.finalize_candidates(parts_b["nonhaz"], r + 1)
-                new_b = X.finalize_candidates(parts_b["new"], r + 1)
-                blocked_cand_b = X.finalize_candidates(parts_b["blocked"], r + 1)
-                enq_final = enq_b
-            else:
-                seen_final, glue_final_f, _, parts_b = seen2.insert_and_probe(
-                    seen_keys_b, probe_cand_b, r, tag="-b",
-                    glue=glue2_f, glue_insert_keys=glue_new_b,
-                    glue_eligible_col=F.col("glue_eligible"),
-                )
-                unseen_b = X.finalize_candidates(parts_b["unseen"], r + 1).persist()
-                glue_resolved_b = X.finalize_candidates(
-                    parts_b["resolved"], r + 1
-                ).persist()
-                inflight2 = (
-                    inflight.union(rest.select("url_key"))
-                    .union(leftover_b.select("url_key"))
-                    .union(retries_b.select("url_key"))
-                )
-                nonhaz_b = unseen_b.join(inflight2, "url_key", "left_semi")
-                new_b = unseen_b.join(inflight2, "url_key", "left_anti")
-            tick("wave-B collect")
-            wave_b = {
-                "decided": decided_b,
-                "admitted": admitted_b, "leftover": leftover_b,
-                "blocked": blocked_b, "fetched": fetched_b, "debits": debits_b,
-                "retries": retries_b, "terminal": terminal_b,
-                "qmin": qmin_b, "candidates": probe_cand_b,
-                "unseen": unseen_b, "glue_resolved": glue_resolved_b,
-                "nonhaz": nonhaz_b, "new": new_b, "enriched": enriched_b,
-                "blocked_cand": blocked_cand_b,
-                "obs_fetched": obs_fetched_b, "obs_term": obs_term_b,
-                "obs_qmin": obs_qmin_b, "obs_blocked": obs_blocked_b,
-            }
+                waves.append(self._wave(
+                    r, "b", carry_rows, carry_policy, host_state,
+                    wave_a.seen, wave_a.glue, wave_a.enq,
+                ))
 
-        # per-branch observations all fire during the single frontier write
+        # per-branch observations all fire during the single frontier
+        # write; wave A's fresh rows are its non-carry rest when wave B
+        # took the carry band
         def bump(df, obs):
             out = df.withColumn("round", F.lit(r + 1)).select(*FRONTIER_COLS)
             return out.observe(obs, F.count(F.lit(1)).alias("n"))
 
-        if wave_b is None:
-            branches = [("left", leftover), ("retry", retries), ("new", new_rows)]
-        else:
-            branches = [
-                ("left", leftover), ("retry", retries), ("rest", rest),
-                ("left_b", wave_b["leftover"]), ("retry_b", wave_b["retries"]),
-                ("new_b", wave_b["new"]),
+        fresh = (
+            [("new", new_rows)] if len(waves) == 1
+            else [("rest", rest), ("new_b", waves[1].new)]
+        )
+        branches = []
+        for w, fresh_branch in zip(waves, fresh):
+            branches += [
+                (f"left{w.sfx}", w.leftover), (f"retry{w.sfx}", w.retries),
+                fresh_branch,
             ]
         branch_obs = {name: Observation(f"{name}_r{r}") for name, _ in branches}
-        frontier2 = None
-        for name, df in branches:
-            piece = bump(df, branch_obs[name])
-            frontier2 = piece if frontier2 is None else frontier2.union(piece)
+        frontier2 = reduce(
+            DataFrame.union, [bump(df, branch_obs[name]) for name, df in branches]
+        )
 
-        # facts assembly: same-shape branches from the two waves are
-        # UNIONED FIRST so each fact machine (the PSL suffix join for
+        # facts assembly: same-shape branches from the waves are UNIONED
+        # FIRST so each fact machine (the PSL suffix join for
         # glue-resolved rows especially — distinct + broadcast-join +
         # hash-agg + joinback, several stages per invocation) runs once
         # per round, not once per wave. At fixture scale the facts job is
         # pure per-stage latency, and halving its stage count is what
         # keeps the two-wave default's probe walls sane.
-        if wave_b is None:
-            fetched_all = fetched
-            glue_res_all = glue_resolved
-            terminal_all = terminal
-            nonhaz_all = nonhaz
-            blocked_all = blocked
-            qmin_all = qmin
-        else:
-            fetched_all = fetched.unionByName(wave_b["fetched"])
-            glue_res_all = glue_resolved.unionByName(wave_b["glue_resolved"])
-            terminal_all = terminal.unionByName(wave_b["terminal"])
-            nonhaz_all = nonhaz.unionByName(wave_b["nonhaz"])
-            blocked_all = blocked.unionByName(wave_b["blocked"])
-            qmin_all = qmin.unionByName(wave_b["qmin"])
-        if blocked_cand is not None:
-            # robots gating at enqueue (stratified): candidate-time blocks
-            blocked_all = blocked_all.unionByName(blocked_cand.select(*FRONTIER_COLS))
-        if wave_b is not None and wave_b["blocked_cand"] is not None:
-            blocked_all = blocked_all.unionByName(
-                wave_b["blocked_cand"].select(*FRONTIER_COLS)
-            )
+        def across(field):
+            return reduce(DataFrame.unionByName, [getattr(w, field) for w in waves])
+
+        glue_res_all = across("resolved")
+        # robots gating at enqueue: candidate-time blocks follow the
+        # admission-time ones
+        blocked_all = reduce(
+            DataFrame.unionByName,
+            [w.blocked for w in waves]
+            + [w.blocked_cand.select(*FRONTIER_COLS) for w in waves]
+        )
         facts = (
-            X.fetched_facts(fetched_all, r)
+            X.fetched_facts(across("fetched"), r)
             .union(X.fetched_facts(glue_res_all, r))  # glue payload facts
             .union(X.simple_facts(glue_res_all, "glue_resolved", r))
-            .union(X.failure_facts(terminal_all, r))
-            .union(X.simple_facts(nonhaz_all, "nonhazardous", r))
+            .union(X.failure_facts(across("terminal"), r))
+            .union(X.simple_facts(across("nonhaz"), "nonhazardous", r))
             .union(X.simple_facts(blocked_all, "robots_blocked", r))
             .union(
                 X.simple_facts(
-                    qmin_all.select("seed", F.col("orig_url").alias("url")),
+                    across("qmin").select("seed", F.col("orig_url").alias("url")),
                     "qmin_requery", r,
                 )
             )
@@ -932,13 +703,6 @@ class CrawlEngine:
         # place, costing nothing at cluster scale where cfg.partitions
         # is the cluster width
         facts = facts.coalesce(cfg.partitions)
-        if os.environ.get("SPARK_GRAFT_EXPLAIN_FACTS") == "1":
-            plan = facts._jdf.queryExecution().executedPlan().toString()
-            n_scan = plan.count("InMemoryTableScan")
-            print(f"  [r{r}] facts plan: {len(plan.splitlines())} lines, "
-                  f"{n_scan} InMemoryTableScan", flush=True)
-            if os.environ.get("SPARK_GRAFT_EXPLAIN_FACTS_FULL") == "1":
-                print(plan, flush=True)
 
         # ---- parallel snapshot writes ---------------------------------------
         nxt = Snapshot(
@@ -946,39 +710,30 @@ class CrawlEngine:
             parent_id=snap.snapshot_id,
             round=r + 1,
         )
-        fetched_slim = fetched.drop("bytes", "out_edges", "glue_edges", "carry_edges")
-        if wave_b is not None:
-            fetched_slim = fetched_slim.unionByName(
-                wave_b["fetched"].drop(
-                    "bytes", "out_edges", "glue_edges", "carry_edges"
-                )
-            )
-        # phase A: writes independent of the dedup verdict; phase B shares
-        # the (now materialized) unseen cache — two parallel job waves,
-        # no duplicate computation of the persisted intermediates
+        fetched_slim = reduce(DataFrame.unionByName, [
+            w.fetched.drop("bytes", "out_edges", "glue_edges", "carry_edges")
+            for w in waves
+        ])
         # dimension-sized tables get few output files (a 31k-row table
         # scattered over 64 shuffle partitions costs 64 task launches +
         # 64 file commits per round, and 64 footer reads next round)
         n_small = max(1, cfg.partitions // 8)
         # dynamic politeness state: ONE per-round delta of O(admitted
         # hosts) post-debit token rows (VERDICT r2 #9) — the static
-        # host_state table is referenced below, never rewritten. With
-        # two waves, a host debited in both keeps the wave-B row.
-        if wave_b is None:
-            debits_final = debits
-        else:
-            debits_final = debits.join(
-                wave_b["debits"], "host", "left_anti"
-            ).unionByName(wave_b["debits"])
+        # host_state table is referenced below, never rewritten. A host
+        # debited in both waves keeps the wave-B row.
+        debits_final = wave_a.debits
+        for w in waves[1:]:
+            debits_final = debits_final.join(
+                w.debits, "host", "left_anti"
+            ).unionByName(w.debits)
         phase_a = {
             "host_tokens": debits_final.coalesce(1),
             # append-only glue AUDIT delta: only this round's discovered
             # (url_key, url) pairs — never the accumulated glue set
             # (VERDICT r2 #2); exact membership lives in the sharded
             # glue filter G (manifest in aux["glue"])
-            "glue": (
-                glue_new if wave_b is None else glue_new.unionByName(glue_new_b)
-            ).coalesce(n_small),
+            "glue": across("glue_new").coalesce(n_small),
             # same narrow fold as facts: the two-wave union otherwise
             # doubles the write task count for a round-sized table
             "fetched": fetched_slim.coalesce(cfg.partitions),
@@ -992,9 +747,9 @@ class CrawlEngine:
             # exhausted-seed count rides the write's Observation, so the
             # next round knows whether a cold sweep is due with no extra
             # job.
-            fetched_seeds = fetched.select("seed")
-            if wave_b is not None:
-                fetched_seeds = fetched_seeds.union(wave_b["fetched"].select("seed"))
+            fetched_seeds = reduce(
+                DataFrame.union, [w.fetched.select("seed") for w in waves]
+            )
             seed_state2 = (
                 seed_state.unionByName(
                     fetched_seeds.groupBy("seed").agg(
@@ -1017,16 +772,16 @@ class CrawlEngine:
                 phase_a["swept_seeds"] = exhausted.coalesce(1)
         # Write scheduling: phase-A tables (independent of the dedup
         # verdict) run concurrently in worker threads while THIS thread
-        # writes the frontier — the frontier job is what materializes
-        # the persisted `unseen` frame (new_rows reads it), so when the
-        # facts write (whose nonhaz branch shares `unseen`) is submitted
-        # right after, it reads the warm cache instead of recomputing.
-        # No standalone count() job anywhere in the round.
-        # Stratified: the frontier write becomes THREE deltas — hot
-        # (small rewrite), a cold APPEND (only this round's spills, never
-        # the backlog), and the per-host queue_state — the O(backlog)
-        # rewrite is gone. All three are read by the next round, so they
-        # stay in the sync write wave even under pipeline_writes.
+        # writes the frontier; the facts write is submitted right after.
+        # Every write reads the waves' checkpointed leaves and persisted
+        # frames, so nothing upstream recomputes. No standalone count()
+        # job anywhere in the round.
+        # While cold is active the frontier write becomes THREE deltas —
+        # hot (small rewrite), a cold APPEND (only this round's spills,
+        # never the backlog), and the per-host queue_state — the
+        # O(backlog) rewrite is gone. All three are read by the next
+        # round, so they stay in the sync write wave even under
+        # pipeline_writes.
         routed_cache = None
         obs_hot = obs_coldadd = obs_qs = None
         part_by: dict[str, list[str]] = {}
@@ -1069,7 +824,6 @@ class CrawlEngine:
                     for name, df in sync_small.items()
                 }
                 nxt.tables["frontier"] = store.write_table(frontier2, r + 1, "frontier")
-                tick("frontier write")
                 for name, fut in futs.items():
                     nxt.tables[name] = fut.result()
             if self._write_pool is None:
@@ -1091,81 +845,63 @@ class CrawlEngine:
                     for name, df in phase_a.items()
                 }
                 nxt.tables["frontier"] = store.write_table(frontier2, r + 1, "frontier")
-                tick("frontier write")
                 futs["facts"] = ex.submit(store.write_table, facts, r + 1, "facts")
                 for name, fut in futs.items():
                     nxt.tables[name] = fut.result()
-        tick("all writes joined")
+        seen_final = waves[-1].seen
         nxt.seen = seen_final.to_manifest()
-        tick("seen manifest")
         # static policy referenced (copy-on-write); this round's token
         # delta joins the merge-on-read list
         nxt.tables["host_state"] = snap.tables["host_state"]
         new_token_paths = token_paths + [nxt.tables.pop("host_tokens")]
+
+        branch_n = {name: int(o.get["n"]) for name, o in branch_obs.items()}
+        n_left = sum(n for name, n in branch_n.items() if name.startswith("left"))
+        n_retry = sum(n for name, n in branch_n.items() if name.startswith("retry"))
+        n_new = sum(branch_n.values()) - n_left - n_retry
+        n_fetched = sum(w.count("fetched") for w in waves)
+        n_bad = sum(w.count("fetched", "bad") for w in waves)
+        n_terminal = sum(w.count("term") for w in waves)
+        n_qmin = sum(w.count("qmin") for w in waves)
+        n_blocked = sum(
+            w.count("blocked") + w.seen.last_stats.get("n_blocked_new", 0)
+            for w in waves
+        )
+        n_glue = sum(w.seen.last_stats.get("n_resolved_new", 0) for w in waves)
+        n_dups = sum(w.seen.last_stats.get("n_dup_inserts", 0) for w in waves)
+        n_frontier2 = sum(branch_n.values())
+        if cold_active:
+            # total frontier = hot horizon + live cold backlog (exact
+            # n_cold bookkeeping); branch counts stay the flow metrics
+            n_cold_total = int(obs_qs.get["nc"] or 0)
+            n_frontier2 = int(obs_hot.get["n"]) + n_cold_total
+            delta_added = int(obs_coldadd.get["n"])
+            new_cold_paths = cold_paths + (
+                [nxt.tables["frontier_cold"]] if delta_added else []
+            )
+            deficit_buckets = sorted(
+                int(b) for b in (obs_qs.get["dbuckets"] or [])
+            )
+            if n_cold_total == 0:
+                new_cold_paths = []  # all dead — drop the references
+        else:
+            # drained mode: frontier2 was written whole as hot; the
+            # untouched queue_state is referenced, not rewritten
+            n_cold_total = 0
+            new_cold_paths = []
+            deficit_buckets = []
+            if "queue_state" in snap.tables:
+                nxt.tables["queue_state"] = snap.tables["queue_state"]
         nxt.aux = {
             "token_paths": new_token_paths,
-            "glue": glue_final_f.to_manifest(),
+            "glue": waves[-1].glue.to_manifest(),
+            "cold_paths": new_cold_paths,
+            "enqueued": waves[-1].enq.to_manifest(),
+            "deficit_buckets": deficit_buckets,
+            "n_active_hosts": (
+                int(obs_qs.get["nactive"] or 0) if cold_active else 0
+            ),
         }
-
-        tick("glue manifest")
-        branch_n = {name: int(o.get["n"]) for name, o in branch_obs.items()}
-        tick("branch obs")
-        n_left = branch_n["left"] + branch_n.get("left_b", 0)
-        n_retry = branch_n["retry"] + branch_n.get("retry_b", 0)
-        n_new = branch_n.get("new", 0) + branch_n.get("rest", 0) + branch_n.get("new_b", 0)
-        n_fetched = int(obs_fetched.get["n"])
-        n_bad = int(obs_fetched.get["bad"] or 0)
-        n_terminal = int(obs_term.get["n"])
-        n_blocked = int(obs_blocked.get["n"])
-        n_qmin = int(obs_qmin.get["n"])
-        n_glue = seen2.last_stats.get("n_resolved_new", 0)
-        n_dups = seen2.last_stats.get("n_dup_inserts", 0)
-        if wave_b is not None:
-            n_fetched += int(wave_b["obs_fetched"].get["n"])
-            n_bad += int(wave_b["obs_fetched"].get["bad"] or 0)
-            n_terminal += int(wave_b["obs_term"].get["n"])
-            n_blocked += int(wave_b["obs_blocked"].get["n"])
-            n_qmin += int(wave_b["obs_qmin"].get["n"])
-            n_glue += seen_final.last_stats.get("n_resolved_new", 0)
-            n_dups += seen_final.last_stats.get("n_dup_inserts", 0)
-        n_frontier2 = sum(branch_n.values())
-        n_cold_total = None
-        if cfg.stratified:
-            n_blocked += seen2.last_stats.get("n_blocked_new", 0)
-            if wave_b is not None:
-                n_blocked += seen_final.last_stats.get("n_blocked_new", 0)
-            if cold_active:
-                # total frontier = hot horizon + live cold backlog (exact
-                # n_cold bookkeeping); branch counts stay the flow metrics
-                n_cold_total = int(obs_qs.get["nc"] or 0)
-                n_frontier2 = int(obs_hot.get["n"]) + n_cold_total
-                delta_added = int(obs_coldadd.get["n"])
-                new_cold_paths = cold_paths + (
-                    [nxt.tables["frontier_cold"]] if delta_added else []
-                )
-                deficit_buckets = sorted(
-                    int(b) for b in (obs_qs.get["dbuckets"] or [])
-                )
-                if n_cold_total == 0:
-                    new_cold_paths = []  # all dead — drop the references
-            else:
-                # drained mode: frontier2 was written whole as hot; the
-                # untouched queue_state is referenced, not rewritten
-                n_cold_total = 0
-                new_cold_paths = []
-                deficit_buckets = []
-                if "queue_state" in snap.tables:
-                    nxt.tables["queue_state"] = snap.tables["queue_state"]
-            nxt.aux.update(
-                {
-                    "cold_paths": new_cold_paths,
-                    "enqueued": enq_final.to_manifest(),
-                    "deficit_buckets": deficit_buckets,
-                    "n_active_hosts": (
-                        int(obs_qs.get["nactive"] or 0) if cold_active else 0
-                    ),
-                }
-            )
         if cfg.seed_budget is not None:
             nxt.aux["n_exhausted"] = int(obs_seed.get["nex"] or 0)
             if sweep_ran:
@@ -1185,24 +921,17 @@ class CrawlEngine:
         # it is opt-in (VERDICT r2 #6: the default round runs exactly the
         # fused-pass action + the snapshot writes).
         lineage = [
-            {"round": r, "stage": "seen", **s}
-            for s in seen2.last_stats.get("shards", [])
+            {"round": r, "stage": "seen" + w.sfx.replace("_", "-"), **s}
+            for w in waves
+            for s in w.seen.last_stats.get("shards", [])
         ]
-        if wave_b is not None:
-            lineage += [
-                {"round": r, "stage": "seen-b", **s}
-                for s in seen_final.last_stats.get("shards", [])
-            ]
         if cfg.collect_lineage:
-            adm_all = admitted if wave_b is None else admitted.unionByName(
-                wave_b["admitted"]
-            )
             lineage += [
                 {
                     "round": r, "stage": "admitted",
                     "partition_id": int(row["pid"]), "n_admitted": int(row["n"]),
                 }
-                for row in adm_all.groupBy(
+                for row in across("admitted").groupBy(
                     F.spark_partition_id().alias("pid")
                 ).agg(F.count("*").alias("n")).collect()
             ]
@@ -1226,43 +955,18 @@ class CrawlEngine:
             # wave-B skip bookkeeping (VERDICT r3 #8 / r4 #5): n_carry is
             # the wave-boundary Observation's count (-1 = observation
             # unavailable, wave B ran on the always-correct path)
-            "n_carry": n_carry if cfg.two_wave else 0,
+            "n_carry": n_carry,
             "wave_b_skipped": bool(cfg.two_wave and n_carry == 0),
             "n_bad_payloads": n_bad,
             "wall_ms": round((time.monotonic() - t0) * 1e3, 1),
             "done": n_frontier2 == 0,
         }
-        to_unpersist = [
-            # decided is the wave-A politeness checkpoint leaf (freed via
-            # free_local_checkpoint below); admitted/leftover are plain
-            # filters of it, listed no longer
-            decided, blocked, debits, fetched, retries, terminal,
-            qmin, probe_cand, glue_resolved,
-        ]
-        if unseen is not None:
-            to_unpersist.append(unseen)
-        if routed_cache is not None:
-            to_unpersist.append(routed_cache)
-        to_unpersist += strat_persisted
-        if wave_b is not None:
-            to_unpersist += [
-                wave_b["decided"], wave_b["blocked"],
-                wave_b["fetched"], wave_b["retries"], wave_b["terminal"],
-                wave_b["qmin"], wave_b["candidates"],
-                wave_b["glue_resolved"],
-            ]
-            if wave_b["unseen"] is not None:
-                to_unpersist.append(wave_b["unseen"])
-            if wave_b["enriched"] is not None:
-                to_unpersist.append(wave_b["enriched"])
-        if over_budget is not None:
-            to_unpersist.append(over_budget)
-        if exhausted is not None:
-            to_unpersist.append(exhausted)
-        if live_dead is not None:
-            to_unpersist.append(live_dead)
-        if enriched is not None:
-            to_unpersist.append(enriched)
+        to_unpersist = [wave_a.debits] + strat_persisted
+        for w in waves:
+            to_unpersist += w.cached
+        for df in (routed_cache, over_budget, exhausted, live_dead):
+            if df is not None:
+                to_unpersist.append(df)
         if cfg.two_wave:
             # the wave-boundary localCheckpoint (new_rows) — released via
             # free_local_checkpoint below; unpersist alone can't touch it
@@ -1270,7 +974,6 @@ class CrawlEngine:
 
         if pending_futs is None:
             store.commit(nxt)
-            tick("metrics+commit")
             for df in to_unpersist:
                 df.unpersist()
                 free_local_checkpoint(df)
@@ -1279,11 +982,192 @@ class CrawlEngine:
             # commit the PREVIOUS round (its background writes have had a
             # whole round to finish), then park this one — ordering keeps
             # manifests monotonic; durability lags exactly one round
-            tick("metrics built")
             self.flush()
             self._pending = (pending_futs, nxt, to_unpersist, seen_final)
-            tick("metrics+pipeline park")
         return nxt
+
+    def _wave(
+        self,
+        r: int,
+        tag: str,
+        rows: DataFrame,
+        prepared: DataFrame,
+        host_state: DataFrame,
+        seen: SeenFilter,
+        glue: SeenFilter,
+        enq: SeenFilter,
+        pending_blocked: DataFrame | None = None,
+        over_budget: DataFrame | None = None,
+    ) -> _Wave:
+        """One pass of the crawl step over ``rows`` against the
+        ``prepared`` politeness policy: admit → fetch/verify → classify
+        misses → expand → robots-at-enqueue → the fused seen/glue/E pass
+        → final candidate rows. ``tag`` ("" for wave A, "b" for wave B)
+        keeps the wave's Observation names and filter state dirs apart.
+        Wave A also takes the robots-blocked seeds parked by start()
+        (``pending_blocked``) and the budget-demoted rows
+        (``over_budget``, inserted into seen in the same pass)."""
+        cfg = self.cfg
+        sfx = f"_{tag}" if tag else ""
+        obs = {
+            k: Observation(f"{k}{sfx}_r{r}")
+            for k in ("blocked", "fetched", "term", "qmin")
+        }
+        # ONE eager checkpoint pins the whole politeness decision (r6,
+        # guide §2.4/§5): admitted/leftover/blocked/debits become plain
+        # filters/aggregations of an in-memory LEAF, so no downstream
+        # job (fetch, fused pass, facts, frontier write) re-plans — or
+        # re-builds the broadcasts of — the frontier/policy lineage.
+        decided = pol.admit_decided(
+            repartition_by_host(rows), prepared
+        ).localCheckpoint()
+        admitted, leftover, blocked, debits = pol.split_decided(decided, r)
+        if pending_blocked is not None:
+            blocked = blocked.unionByName(pending_blocked)
+        blocked = blocked.observe(
+            obs["blocked"], F.count(F.lit(1)).alias("n")
+        ).persist()
+
+        if cfg.fetch_mode == "synthetic":
+            # fetch + payload verification fused: bytes stay in the
+            # stage; the enriched frame is materialized ONCE so the
+            # hit/miss split reads it instead of re-running the fetch per
+            # branch. Explicit fan-out first: AQE sizes partitions by
+            # BYTES, and a frontier row is ~200 B while fetching it costs
+            # ~1 ms of Python — size-based coalescing would run the whole
+            # fetch on 1-2 cores. Fixed-width repartition is exempt from
+            # AQE coalescing, guaranteeing one fetch slice per task slot.
+            fan_out = admitted.repartition(cfg.partitions * 2)
+            # localCheckpoint (eager), not persist: the fetch is the
+            # round's expensive Python stage and EVERY downstream job
+            # re-plans through it (seen_keys unions, expansion, facts,
+            # fetched write, glue write). Persisted, the four seen_keys
+            # branches raced to materialize it concurrently inside the
+            # fused pass (measured: the fetch UDF ran 3-4x in round 0's
+            # fused-pass job) and the pipelined writes re-ran it when
+            # cache substitution failed on the deep facts plan. The
+            # eager checkpoint runs the fetch exactly once, right here,
+            # and hands every consumer a leaf. Recovery at cluster
+            # scale is round-granular via the snapshot store (resume),
+            # not task-lineage replay — same tradeoff as the wave
+            # boundary checkpoint in run_round.
+            enriched = X.fetch_synthetic(
+                fan_out, cfg.gen_seed, cfg.n_pages, cfg.n_hosts, cfg.px_scale,
+                verify=cfg.verify_payloads,
+            ).localCheckpoint()
+            fetched = enriched.filter(F.col("is_hit")).drop(
+                "is_hit", "qmin_fallback", "fail_code"
+            )
+            misses = enriched.filter(~F.col("is_hit")).select(
+                *FRONTIER_COLS, "qmin_fallback", "fail_code"
+            )
+            has_ok = True
+        else:
+            # same materialization boundary as the synthetic path:
+            # the corpus join runs exactly once and every consumer
+            # (hit/miss split, seen_keys unions, facts, writes) plans
+            # from the in-memory leaf instead of re-running the join.
+            enriched = X.fetch(admitted, self.pages_keyed).localCheckpoint()
+            fetched = enriched.filter(F.col("is_hit")).drop("is_hit")
+            misses = enriched.filter(~F.col("is_hit")).select(*FRONTIER_COLS)
+            if cfg.verify_payloads:
+                fetched = X.verify_payloads(fetched, cfg.gen_seed, cfg.px_scale)
+            has_ok = cfg.verify_payloads
+        fetched = fetched.observe(
+            obs["fetched"],
+            F.count(F.lit(1)).alias("n"),
+            (
+                F.sum((~F.col("payload_ok")).cast("long")) if has_ok else F.lit(0)
+            ).alias("bad"),
+        ).persist()
+        retries, terminal, qmin = X.classify_misses(misses, cfg.gen_seed)
+        # count observations attach to the source frames, NOT the facts
+        # write: they fire during the fused pass (whose seen_keys union
+        # materializes these frames), so every metric is known before any
+        # output-table write — a requirement for pipelined writes
+        retries = retries.persist()
+        terminal = terminal.observe(obs["term"], F.count(F.lit(1)).alias("n")).persist()
+        qmin = qmin.observe(obs["qmin"], F.count(F.lit(1)).alias("n")).persist()
+
+        glue_new = X.new_glue(fetched)
+        candidates = X.expand_candidates(
+            fetched, cfg.n_salts, r + 1, extra_edges=qmin,
+        )
+        seen_keys = (
+            fetched.select("url_key")
+            .union(terminal.select("url_key"))
+            .union(blocked.select("url_key"))
+            # the minimized-form url itself is done (requery enqueued)
+            .union(qmin.select(F.col("orig_url_key").alias("url_key")))
+        )
+        if over_budget is not None:
+            seen_keys = seen_keys.union(over_budget.select("url_key"))
+        # Robots verdict at enqueue time: same predicate politeness
+        # applies, computed once per candidate — blocked candidates
+        # become terminal inside the fused pass and never enter the
+        # frontier. The join is against the robots-ACTIVE policy slice
+        # only (hosts without disallow rules can never block — null-safe
+        # predicate), shuffle-hash: candidate hosts are unknown in
+        # advance, and a host-dimension broadcast is exactly the
+        # 10^8-host scale-killer (VERDICT r2 #1). The probe frame is read
+        # by the fused pass AND by every part's verdict join afterwards —
+        # persist it so the expansion shuffle and the robots join run
+        # once per wave.
+        robots_pol = pol.robots_policy(host_state).hint("shuffle_hash")
+        probe_cand = (
+            candidates.join(robots_pol, "host", "left")
+            .withColumn("will_block", pol.robots_block_pred())
+            .drop("robots_disallow", "robots_fetched")
+            .persist()
+        )
+        # ONE fused applyInPandas pass: per shard, insert this wave's
+        # keys (npz + exact-key tier rewrite) then probe the expansion
+        # candidates against the updated shard. Glue-hit candidates are
+        # resolve rows (the glue short-circuit, dnsresolver_new.py:
+        # 125-126): an unseen glue hit is resolved from the glue payload
+        # — facts now, seen now, never fetched. The pass also probes and
+        # updates the ever-enqueued filter E: the in-flight cycle break
+        # (P11) without touching the backlog — unseen ∧ enqueued ⇔
+        # in-flight, since rows only leave the frontier by becoming seen.
+        # The stats collect is also the action that materializes the
+        # fetched/blocked caches.
+        seen2, glue2, enq2, parts = seen.insert_and_probe(
+            seen_keys, probe_cand, r, tag=f"-{tag}" if tag else "",
+            glue=glue, glue_insert_keys=glue_new,
+            glue_eligible_col=F.col("glue_eligible"),
+            enqueue=enq, block_col=F.col("will_block"),
+        )
+        resolved = X.finalize_candidates(parts["resolved"], r + 1).persist()
+        return _Wave(
+            sfx=sfx,
+            admitted=admitted,
+            leftover=leftover,
+            retries=retries,
+            new=X.finalize_candidates(parts["new"], r + 1),
+            debits=debits,
+            fetched=fetched,
+            glue_new=glue_new,
+            resolved=resolved,
+            terminal=terminal,
+            nonhaz=X.finalize_candidates(parts["nonhaz"], r + 1),
+            blocked=blocked,
+            # blocked-at-enqueue counts ride the fused pass's stat rows
+            # (an Observation here would block on the pipelined facts
+            # write, serializing the write overlap)
+            blocked_cand=X.finalize_candidates(parts["blocked"], r + 1),
+            qmin=qmin,
+            obs=obs,
+            seen=seen2,
+            glue=glue2,
+            enq=enq2,
+            # decided/enriched are checkpoint leaves (freed via
+            # free_local_checkpoint); admitted/leftover are plain filters
+            # of decided
+            cached=[
+                decided, blocked, fetched, retries, terminal, qmin,
+                probe_cand, resolved, enriched,
+            ],
+        )
 
     # -- outputs ------------------------------------------------------------
     def facts_df(self, upto: Snapshot) -> DataFrame:

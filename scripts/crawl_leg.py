@@ -5,8 +5,9 @@ so evlog_stages.py can attribute per-stage cost. Analysis only — all
 A/B numbers quoted in OPTIMIZATION_r06.md come from the frozen
 bench.py --crawl-only in a fresh JVM.
 
-Env: SPARK_GRAFT_BENCH_TWO_WAVE=0/1, SPARK_GRAFT_EVENTLOG=<dir>,
-SPARK_GRAFT_ROUND_TRACE=1 for the per-phase ticks.
+Env: SPARK_GRAFT_BENCH_TWO_WAVE=0/1, SPARK_GRAFT_EVENTLOG=<dir>.
+Per-layer spans and per-round Spark-idle time come from
+``python3 perfbench/run.py --trace 1``.
 """
 
 import json

@@ -5,10 +5,10 @@ equal the pure-Python oracle's (oracle/crawler.py) on the same corpus.
 
 The suite carries two unscanned-seed cases (tests/test_fuzz_parity.py)
 to keep the pytest wall bounded; this script is the wide version run
-out-of-band: new generator seeds crossed with frontier mode
-(classic/stratified), wave mode (two-wave/single-wave), per-seed
-budgets, a bigger corpus, and the synthetic (no-corpus-join) fetch
-path. Results are recorded in BENCH.md / NOTES_r5.md.
+out-of-band: new generator seeds crossed with wave mode
+(two-wave/single-wave), per-seed budgets, a bigger corpus, and the
+synthetic (no-corpus-join) fetch path. Results are recorded in
+BENCH.md / NOTES_r5.md and CHANGES.md.
 
     python scripts/parity_sweep.py            # full matrix
     python scripts/parity_sweep.py --extended # second matrix: wide state
@@ -52,10 +52,10 @@ from dnscrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine, FACT_KIN
 LAYOUT = dict(seen_shards=2, seen_bits=1 << 16, seen_buckets=1 << 10, partitions=2)
 
 
-def case(fseed, *, stratified, two_wave=True, seed_budget=None, n=240,
+def case(fseed, *, two_wave=True, seed_budget=None, n=240,
          n_seeds=12, rounds=3, fetch_mode="join", layout=None, extra=None,
          rate_scale=1.0, resume_at=None, px_scale=1):
-    return dict(fseed=fseed, stratified=stratified, two_wave=two_wave,
+    return dict(fseed=fseed, two_wave=two_wave,
                 seed_budget=seed_budget, n=n, n_seeds=n_seeds, rounds=rounds,
                 fetch_mode=fetch_mode, layout=layout or LAYOUT,
                 extra=extra or {}, rate_scale=rate_scale, resume_at=resume_at,
@@ -63,16 +63,22 @@ def case(fseed, *, stratified, two_wave=True, seed_budget=None, n=240,
 
 
 MATRIX = (
-    # 1. new unscanned generator seeds, engine-default shape, both frontiers
-    [case(s, stratified=st) for s in (37, 41, 43, 47, 53, 59) for st in (False, True)]
+    # 1. new unscanned generator seeds, engine-default shape
+    [case(s) for s in (37, 41, 43, 47, 53, 59)]
     # 2. single-wave on a subset
-    + [case(s, stratified=st, two_wave=False) for s in (37, 43) for st in (False, True)]
+    + [case(s, two_wave=False) for s in (37, 43)]
     # 3. per-seed fetch budget (round-granular kill) on a subset
-    + [case(s, stratified=st, seed_budget=3) for s in (41, 47) for st in (False, True)]
+    + [case(s, seed_budget=3) for s in (41, 47)]
     # 4. bigger corpus, more seeds, one extra round
-    + [case(61, stratified=st, n=480, n_seeds=20, rounds=4) for st in (False, True)]
+    + [case(61, n=480, n_seeds=20, rounds=4)]
     # 5. synthetic fetch (per-URL regeneration, no corpus join)
-    + [case(37, stratified=st, fetch_mode="synthetic") for st in (False, True)]
+    + [case(37, fetch_mode="synthetic")]
+    # 6. politeness-bound backlog: 120 seeds on 16 hosts at a quarter of
+    # the token rate keep hosts cold, so every round spills discoveries
+    # into a new cold delta, and replenish_chunk=1 makes every later
+    # round pull across several deltas
+    + [case(181, n_seeds=120, rate_scale=0.25, rounds=4,
+            extra=dict(replenish_chunk=1))]
 )
 
 # Second out-of-band matrix (--extended): crosses the axes the first
@@ -83,19 +89,18 @@ MATRIX = (
 # budget × synthetic fetch, budget × wide layout).
 WIDE = dict(seen_shards=8, seen_bits=1 << 16, seen_buckets=1 << 10, partitions=4)
 MATRIX_EXTENDED = (
-    # 1. wide state layout × new unscanned seeds, both frontiers
-    [case(s, stratified=st, layout=WIDE) for s in (67, 71) for st in (False, True)]
+    # 1. wide state layout × new unscanned seeds
+    [case(s, layout=WIDE) for s in (67, 71)]
     # 2. depth: 6 two-wave rounds (the suite's deepest crawl is 5)
-    + [case(73, stratified=st, rounds=6) for st in (False, True)]
+    + [case(73, rounds=6)]
     # 3. triple interaction: per-seed budget under single-wave
-    + [case(79, stratified=st, two_wave=False, seed_budget=3) for st in (False, True)]
+    + [case(79, two_wave=False, seed_budget=3)]
     # 4. per-seed budget on the synthetic (no-corpus-join) fetch path
-    + [case(83, stratified=st, fetch_mode="synthetic", seed_budget=4)
-       for st in (False, True)]
+    + [case(83, fetch_mode="synthetic", seed_budget=4)]
     # 5. 4x the suite corpus: 960 pages, 24 seeds, 4 rounds
-    + [case(89, stratified=st, n=960, n_seeds=24, rounds=4) for st in (False, True)]
+    + [case(89, n=960, n_seeds=24, rounds=4)]
     # 6. budget × wide layout × two-wave
-    + [case(97, stratified=st, seed_budget=3, layout=WIDE) for st in (False, True)]
+    + [case(97, seed_budget=3, layout=WIDE)]
 )
 
 # Third matrix (--knobs): the engine knobs no fixture moves off their
@@ -108,17 +113,15 @@ MATRIX_EXTENDED = (
 # state_compact_every=0 compacts the politeness token deltas every
 # round; cold_buckets changes the cold-delta partitioning.
 MATRIX_KNOBS = (
-    [case(101, stratified=st, extra=dict(policy_broadcast_max=0))
-     for st in (False, True)]
-    + [case(103, stratified=True, extra=dict(replenish_chunk=c)) for c in (1, 8)]
-    + [case(107, stratified=True, extra=dict(cold_buckets=4))]
-    + [case(109, stratified=st, extra=dict(state_compact_every=0))
-       for st in (False, True)]
+    [case(101, extra=dict(policy_broadcast_max=0))]
+    + [case(103, extra=dict(replenish_chunk=c)) for c in (1, 8)]
+    + [case(107, extra=dict(cold_buckets=4))]
+    + [case(109, extra=dict(state_compact_every=0))]
     # everything at once, on top of a per-seed budget
-    + [case(113, stratified=True, seed_budget=3, extra=dict(
+    + [case(113, seed_budget=3, extra=dict(
         policy_broadcast_max=0, state_compact_every=0, replenish_chunk=1,
         cold_buckets=4))]
-    + [case(113, stratified=False, seed_budget=3, extra=dict(
+    + [case(113, seed_budget=3, extra=dict(
         policy_broadcast_max=0, state_compact_every=0))]
 )
 
@@ -134,24 +137,20 @@ MATRIX_KNOBS = (
 # the drain point: the A6 emptiness stop must fire at the same round as
 # the oracle's — trace equality pins it).
 MATRIX_LIFECYCLE = (
-    # 1. pipelined writes on unscanned topologies, both frontiers
-    [case(127, stratified=st, extra=dict(pipeline_writes=True))
-     for st in (False, True)]
+    # 1. pipelined writes on an unscanned topology
+    [case(127, extra=dict(pipeline_writes=True))]
     # 2. interrupt@2 + fresh-engine resume, eager commit path
-    + [case(131, stratified=st, rounds=4, resume_at=2) for st in (False, True)]
+    + [case(131, rounds=4, resume_at=2)]
     # 3. interrupt@2 + resume composed with pipelined writes
-    + [case(137, stratified=st, rounds=4, resume_at=2,
-            extra=dict(pipeline_writes=True)) for st in (False, True)]
+    + [case(137, rounds=4, resume_at=2, extra=dict(pipeline_writes=True))]
     # 4. politeness rate scaling (halved and doubled token rates)
-    + [case(139, stratified=True, rate_scale=0.5),
-       case(139, stratified=False, rate_scale=2.0)]
-    # 5. opt-in lineage collection, both frontiers
-    + [case(149, stratified=st, extra=dict(collect_lineage=True))
-       for st in (False, True)]
-    # 6. cold-delta compaction every round (stratified-only knob)
-    + [case(151, stratified=True, extra=dict(cold_compact_every=0))]
+    + [case(139, rate_scale=0.5), case(139, rate_scale=2.0)]
+    # 5. opt-in lineage collection
+    + [case(149, extra=dict(collect_lineage=True))]
+    # 6. cold-delta compaction every round
+    + [case(151, extra=dict(cold_compact_every=0))]
     # 7. run-to-drain: the frontier empties well before max_rounds
-    + [case(157, stratified=st, rounds=12) for st in (False, True)]
+    + [case(157, rounds=12)]
 )
 
 
@@ -163,12 +162,12 @@ MATRIX_LIFECYCLE = (
 # removed entirely must not change a crawl decision).
 MATRIX_PHYS = (
     # 1. salting collapsed to 1 (no spread) and widened to 8
-    [case(163, stratified=st, extra=dict(n_salts=1)) for st in (False, True)]
-    + [case(167, stratified=True, extra=dict(n_salts=8))]
+    [case(163, extra=dict(n_salts=1))]
+    + [case(167, extra=dict(n_salts=8))]
     # 2. 4x payload pixels, per-row PSNR/exact verification on
-    + [case(173, stratified=st, px_scale=4) for st in (False, True)]
+    + [case(173, px_scale=4)]
     # 3. payload verification off
-    + [case(179, stratified=True, extra=dict(verify_payloads=False))]
+    + [case(179, extra=dict(verify_payloads=False))]
 )
 
 
@@ -182,7 +181,7 @@ def run_case(spark, c, root):
                         rate_scale=c["rate_scale"])
 
     cfg_kw = dict(max_rounds=c["rounds"], gen_seed=fseed, px_scale=px,
-                  stratified=c["stratified"], two_wave=c["two_wave"],
+                  two_wave=c["two_wave"],
                   seed_budget=c["seed_budget"], **c["layout"],
                   **c.get("extra", {}))
     if c["fetch_mode"] == "synthetic":
@@ -213,6 +212,12 @@ def run_case(spark, c, root):
         final = eng.run(eng.start(seeds, hs))
 
     got = {r["url"] for r in eng.seen_urls(final).collect()}
+    # deepest cold-delta list a replenish could read: the snapshots that
+    # a later round ran from
+    max_cold = max(
+        len(eng.store.load(rr).aux.get("cold_paths", []))
+        for rr in eng.store.history() if rr < final.round
+    )
     bad = []
     if got != ores.seen:
         bad.append(f"seen: engine {len(got)} vs oracle {len(ores.seen)}")
@@ -226,7 +231,7 @@ def run_case(spark, c, root):
             for kind in FACT_KINDS:
                 if list(results[seed][kind]) != sorted(kinds.get(kind, set())):
                     bad.append(f"facts {seed}/{kind}")
-    return len(got), bad
+    return len(got), max_cold, bad
 
 
 def main():
@@ -249,9 +254,11 @@ def main():
     with tempfile.TemporaryDirectory(prefix="parity_sweep_") as tmp:
         for i, c in enumerate(matrix):
             t0 = time.monotonic()
-            n_seen, bad = run_case(spark, c, os.path.join(tmp, f"case{i}"))
+            n_seen, max_cold, bad = run_case(
+                spark, c, os.path.join(tmp, f"case{i}")
+            )
             dt = time.monotonic() - t0
-            tag = (f"seed={c['fseed']} strat={int(c['stratified'])} "
+            tag = (f"seed={c['fseed']} "
                    f"2w={int(c['two_wave'])} budget={c['seed_budget']} "
                    f"n={c['n']} r={c['rounds']} mode={c['fetch_mode']} "
                    f"shards={c['layout']['seen_shards']}"
@@ -260,9 +267,11 @@ def main():
                    + (f" resume@{c['resume_at']}" if c["resume_at"] is not None else "")
                    + (f" extra={c['extra']}" if c.get("extra") else ""))
             status = "OK " if not bad else "BAD"
-            print(f"[{status}] {tag}: seen={n_seen} ({dt:.1f}s)"
+            print(f"[{status}] {tag}: seen={n_seen} max_cold_deltas={max_cold} "
+                  f"({dt:.1f}s)"
                   + ("" if not bad else f"  {bad}"), flush=True)
-            lines.append({**c, "seen": n_seen, "ok": not bad, "sec": round(dt, 1)})
+            lines.append({**c, "seen": n_seen, "max_cold_deltas": max_cold,
+                          "ok": not bad, "sec": round(dt, 1)})
             n_bad += bool(bad)
     print(json.dumps({"n_cases": len(matrix), "n_bad": n_bad, "cases": lines}))
     spark.stop()

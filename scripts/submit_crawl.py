@@ -8,7 +8,7 @@ change).
         --py-files dist/dnscrawler_spark.zip \
         scripts/submit_crawl.py \
         --root /path/to/snapshots --n-pages 2000000 --n-seeds 150000 \
-        --max-rounds 4 --stratified
+        --max-rounds 4
 
 The synthetic corpus keeps the job self-contained (no input data to
 stage); swap ``--fetch-mode join`` + a pages table path for a real
@@ -42,7 +42,6 @@ def main() -> None:
     ap.add_argument("--seen-shards", type=int, default=None)
     ap.add_argument("--seen-bits", type=int, default=None)
     ap.add_argument("--seen-buckets", type=int, default=None)
-    ap.add_argument("--stratified", action="store_true")
     # two-wave is the engine default (the reference runs two waves
     # unconditionally); this opts into the leaner single-wave loop
     ap.add_argument("--single-wave", action="store_true")
@@ -73,7 +72,6 @@ def main() -> None:
             }.items()
             if v is not None
         },
-        stratified=args.stratified,
         two_wave=not args.single_wave,
         pipeline_writes=args.pipeline_writes,
         collect_lineage=False,

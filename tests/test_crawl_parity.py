@@ -3,26 +3,18 @@ politeness budget ⇒ identical final URL-seen set, identical normalized
 crawl order, identical per-seed fact sets."""
 
 import pytest
+from conftest import (
+    CHEAP_CRAWL_LAYOUT as SUB_LAYOUT, MAX_ROUNDS, N, N_SEEDS, SEED,
+)
 from pyspark.sql import functions as F
 
 from dnscrawler_spark import datagen
 from dnscrawler_spark.oracle import crawler as oracle
 from dnscrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine, FACT_KINDS
 
-# Fixture shape shared with the __spark_entry__ probes (VERDICT r3 #1/#5:
-# the old 8-round/seed-42 shape needed all 8 two-wave rounds to reach the
-# qmin motif; this scanned shape reaches EVERY motif — glue short-circuit,
-# qmin fallback, robots block, ip/missing-ns failures, ps_ promotion,
-# two-wave carry moves, seed-budget demotion — by round 5, at 14 fact
-# kinds vs the old 8)
-N = 240
-SEED = 13
-N_SEEDS = 12
-MAX_ROUNDS = 5
-SUB_ROUNDS = 4  # config-variant crawls (resume/budget/pipelined): every
-# motif they assert still fires by round 4 (oracle-scanned; round 3
-# loses budget_exceeded AND qmin_requery — 4 is the floor)
-from conftest import CHEAP_CRAWL_LAYOUT as SUB_LAYOUT
+# corpus / oracle_result / engine_run / variant_run / synthetic_run /
+# budget_run are the session fixtures in conftest, shared with
+# test_stratified: one engine crawl per config shape.
 
 
 @pytest.fixture(autouse=True, scope="module")
@@ -30,34 +22,6 @@ def _crawl_conf(crawl_conf):
     """Run this module's fixture crawls under the shared crawl-time
     session conf (conftest.crawl_conf)."""
     yield
-
-
-@pytest.fixture(scope="module")
-def corpus():
-    n_hosts = datagen.default_n_hosts(N)
-    return [datagen.page_row(i, SEED, N, n_hosts) for i in range(N)]
-
-
-@pytest.fixture(scope="module")
-def oracle_result(corpus):
-    seeds = datagen.seed_urls(N_SEEDS, N, seed=SEED)
-    return oracle.crawl(corpus, seeds, max_rounds=MAX_ROUNDS, gen_seed=SEED)
-
-
-@pytest.fixture(scope="module")
-def engine_run(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("crawl"))
-    pages = datagen.generate_pages(spark, N, seed=SEED, partitions=4)
-    hs = datagen.generate_host_state(pages)
-    cfg = CrawlConfig(
-        max_rounds=MAX_ROUNDS, seen_shards=8, seen_bits=1 << 16, seen_buckets=1 << 10,
-        partitions=4, gen_seed=SEED, collect_lineage=True,  # opt-in: admitted breakdown tested below
-    )
-    eng = CrawlEngine(spark, pages, root, cfg)
-    seeds = datagen.seed_urls(N_SEEDS, N, seed=SEED)
-    snap = eng.start(seeds, hs)
-    final = eng.run(snap)
-    return eng, final
 
 
 def test_seen_set_parity(engine_run, oracle_result):
@@ -120,56 +84,18 @@ def test_metrics_and_lineage_recorded(engine_run):
     assert m["n_admitted"] == sum(l["n_admitted"] for l in adm)
 
 
-def test_synthetic_fetch_parity(spark, tmp_path_factory, oracle_result):
+def test_synthetic_fetch_parity(synthetic_run, oracle_result):
     """fetch_mode='synthetic' (per-URL regeneration, no corpus join) must
-    produce the identical crawl: same seen set, same trace, same facts."""
-    root = str(tmp_path_factory.mktemp("synth"))
-    cfg = CrawlConfig(
-        max_rounds=MAX_ROUNDS, fetch_mode="synthetic", n_pages=N,
-        gen_seed=SEED, **SUB_LAYOUT,
-    )
-    hs = datagen.generate_host_state_synthetic(spark, datagen.default_n_hosts(N))
-    eng = CrawlEngine(spark, None, root, cfg)
-    snap = eng.start(datagen.seed_urls(N_SEEDS, N, seed=SEED), hs)
-    final = eng.run(snap)
+    produce the identical crawl: same seen set, same trace."""
+    eng, final = synthetic_run
     assert {r["url"] for r in eng.seen_urls(final).collect()} == oracle_result.seen
     assert eng.crawl_trace(final) == oracle_result.trace
 
 
-@pytest.fixture(scope="module")
-def variant_run(spark, tmp_path_factory, corpus):
-    """ONE hardened config-variant crawl shared by the resume and
-    pipelined-writes tests (VERDICT r4 #3: one engine crawl per config
-    shape, each test keeps its own assertions): pipeline_writes=True,
-    interrupted after round 2, flushed (the documented durability point
-    for pipelined stores — rounds.py flush()), then resumed by a FRESH
-    engine from disk only and run to completion. Any of the composed
-    mechanisms — overlapped writes, manifest round-trip, round replay —
-    changing any output fails the parity asserts in the consumers."""
-    root = str(tmp_path_factory.mktemp("variant"))
-    ores = oracle.crawl(
-        corpus, datagen.seed_urls(N_SEEDS, N, seed=SEED), max_rounds=SUB_ROUNDS, gen_seed=SEED
-    )
-    pages = datagen.generate_pages(spark, N, seed=SEED, partitions=4)
-    hs = datagen.generate_host_state(pages)
-    cfg = CrawlConfig(
-        max_rounds=SUB_ROUNDS, pipeline_writes=True, gen_seed=SEED, **SUB_LAYOUT,
-    )
-    eng1 = CrawlEngine(spark, pages, root, cfg)
-    snap = eng1.start(datagen.seed_urls(N_SEEDS, N, seed=SEED), hs)
-    for _ in range(2):
-        snap = eng1.run_round(snap)
-    eng1.flush()  # durability point; beyond it the engine is discarded
-    # "crash": throw the engine away; resume from disk only
-    eng2 = CrawlEngine(spark, pages, root, cfg)
-    resumed = eng2.resume()
-    final = eng2.run(resumed)  # run() flushes pending writes
-    return eng2, resumed, final, ores, pages, cfg
-
-
 def test_resume_equals_uninterrupted(variant_run):
     """Kill after round 2 (post-flush), resume with a fresh engine: final
-    state must equal the uninterrupted run (SURVEY §5.2.5)."""
+    state must equal the uninterrupted run (SURVEY §5.2.5) — cold paths,
+    queue state and the E filter all round-trip through the manifest."""
     eng2, resumed, final, ores, _, _ = variant_run
     assert resumed.round == 2
     assert {r["url"] for r in eng2.seen_urls(final).collect()} == ores.seen
@@ -256,23 +182,14 @@ def test_qmin_fallback_motif(engine_run, oracle_result):
     assert qmin_urls <= seen, "minimized urls are done after the requery"
 
 
-def test_seed_budget_parity(spark, tmp_path_factory, corpus):
+def test_seed_budget_parity(budget_run):
     """W5/X2 per-seed budget (run/run.py:59 analog): engine and oracle
-    agree under a tight budget, and the budget actually fires."""
-    root = str(tmp_path_factory.mktemp("budget"))
-    budget = 6
-    ores = oracle.crawl(
-        corpus, datagen.seed_urls(N_SEEDS, N, seed=SEED),
-        max_rounds=SUB_ROUNDS, seed_budget=budget, gen_seed=SEED,
-    )
-    pages = datagen.generate_pages(spark, N, seed=SEED, partitions=4)
-    hs = datagen.generate_host_state(pages)
-    cfg = CrawlConfig(
-        max_rounds=SUB_ROUNDS, seed_budget=budget, gen_seed=SEED, **SUB_LAYOUT,
-    )
-    eng = CrawlEngine(spark, pages, root, cfg)
-    snap = eng.start(datagen.seed_urls(N_SEEDS, N, seed=SEED), hs)
-    final = eng.run(snap)
+    agree under a tight budget, and the budget actually fires. Hot rows
+    demote at round start, a newly exhausted seed's cold backlog is
+    demoted by the one-time exhaustion-round sweep, and post-exhaustion
+    discoveries ride pending_demote into the next round — together
+    EXACTLY the oracle's whole-frontier round-start demotion."""
+    eng, final, ores = budget_run
     assert {r["url"] for r in eng.seen_urls(final).collect()} == ores.seen
     assert eng.crawl_trace(final) == ores.trace
     exceeded = set()
@@ -280,9 +197,12 @@ def test_seed_budget_parity(spark, tmp_path_factory, corpus):
         exceeded |= kinds.get("budget_exceeded", set())
     assert exceeded, "tight budget must demote some frontier rows"
     results = {r["seed"]: r for r in eng.results(final).collect()}
+    assert set(results) == set(ores.facts)
     for seed, kinds in ores.facts.items():
-        want = sorted(kinds.get("budget_exceeded", set()))
-        assert list(results[seed]["budget_exceeded"]) == want
+        for kind in FACT_KINDS:
+            want = sorted(kinds.get(kind, set()))
+            got = list(results[seed][kind])
+            assert got == want, f"{seed} {kind}: {got} != {want}"
 
 
 def test_two_wave_parity(engine_run, oracle_result, corpus):
@@ -315,10 +235,10 @@ def test_two_wave_parity(engine_run, oracle_result, corpus):
 
 def test_pipelined_writes_parity(spark, variant_run):
     """pipeline_writes=True (fetched/facts writes overlap the next round)
-    must not change ANY output: seen/trace/facts parity, and a fresh
-    engine can resume from the flushed store. Rides the shared variant
-    crawl — its whole run (both pre- and post-resume halves) executed
-    with pipelining on."""
+    — the bench's configuration — must not change ANY output:
+    seen/trace/facts parity, and a fresh engine can resume from the
+    flushed store. Rides the shared variant crawl — its whole run (both
+    pre- and post-resume halves) executed with pipelining on."""
     eng, resumed, final, ores, pages, cfg = variant_run
     assert {r["url"] for r in eng.seen_urls(final).collect()} == ores.seen
     assert eng.crawl_trace(final) == ores.trace

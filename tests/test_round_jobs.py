@@ -77,8 +77,8 @@ def _mk_frontier(spark, urls):
 
 
 def test_admit_full_dim_path_never_broadcasts_policy(spark):
-    """VERDICT r2 #1 plan gate: the full-dimension policy join (classic /
-    drained / all-hosts rounds) is a shuffled hash join — NO
+    """VERDICT r2 #1 plan gate: the full-dimension policy join (drained /
+    all-hosts rounds) is a shuffled hash join — NO
     BroadcastExchange anywhere in the admission plan, regardless of the
     host dimension's size estimate."""
     from dnscrawler_spark.datagen import HOST_STATE_SCHEMA

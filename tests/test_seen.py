@@ -87,22 +87,32 @@ def test_fused_insert_and_probe_same_round_dup(spark, tmp_path):
     """The fused pass must treat a key inserted THIS round as seen when
     it also appears as a probe candidate (the same-round duplicate: a
     page fetched in round r that is also discovered as an edge in round
-    r) — and must still pass brand-new keys through."""
+    r) — and must still pass brand-new keys through. The fused
+    ever-enqueued filter E then holds the new keys, so the next round
+    reports them as in flight, not new."""
     f = SeenFilter(state_dir=str(tmp_path / "s"), n_shards=4,
+                   n_bits=1 << 14, n_buckets=1 << 8)
+    e = SeenFilter(state_dir=str(tmp_path / "e"), n_shards=4,
                    n_bits=1 << 14, n_buckets=1 << 8)
     ins = spark.createDataFrame([(k,) for k in range(100)], ["url_key"])
     probe = spark.createDataFrame(
         [(k,) for k in range(50, 150)], ["url_key"]
     ).withColumn("tag", F.lit("x"))
-    f2, _, _, parts = f.insert_and_probe(ins, probe, round_no=0)
-    got = sorted(r["url_key"] for r in parts["unseen"].collect())
+    f2, _, e2, parts = f.insert_and_probe(
+        ins, probe, round_no=0, enqueue=e, block_col=F.lit(False)
+    )
+    got = sorted(r["url_key"] for r in parts["new"].collect())
     assert got == list(range(100, 150))
-    # next round: everything inserted so far is seen via the new filter
+    assert parts["nonhaz"].count() == 0
+    # next round: everything inserted so far is seen via the new filter,
+    # and last round's new keys are in flight via the new E
     probe2 = spark.createDataFrame([(k,) for k in range(150)], ["url_key"])
     f3, _, _, parts2 = f2.insert_and_probe(
-        spark.createDataFrame([(999999,)], ["url_key"]), probe2, round_no=1
+        spark.createDataFrame([(999999,)], ["url_key"]), probe2, round_no=1,
+        enqueue=e2, block_col=F.lit(False),
     )
-    got2 = sorted(r["url_key"] for r in parts2["unseen"].collect())
+    assert parts2["new"].count() == 0
+    got2 = sorted(r["url_key"] for r in parts2["nonhaz"].collect())
     assert got2 == list(range(100, 150))
     f3.release()
 

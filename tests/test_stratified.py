@@ -1,46 +1,36 @@
 """Stratified (hot/cold) frontier: exactness vs the oracle + the scale
-properties the mode exists for (VERDICT r1 #3).
+properties the frontier exists for (VERDICT r1 #3).
 
-Exactness: the stratified engine must produce the IDENTICAL seen set,
-crawl trace, and per-seed facts as the classic engine and the oracle —
-the hot/cold split, deficit replenish, robots-at-enqueue, and the fused
-ever-enqueued filter are pure optimizations of the same semantics.
+Exactness: the engine must produce the IDENTICAL seen set, crawl trace,
+and per-seed facts as the oracle — the hot/cold split, deficit
+replenish, robots-at-enqueue, and the fused ever-enqueued filter are
+pure optimizations of the same semantics. The parity crawls are the
+session fixtures in conftest, shared with test_crawl_parity; the tests
+here pin that each crawl actually ran the stratified path they cover.
 
 Scale properties asserted here:
 - the per-round frontier write is hot + this round's cold delta, never
   the backlog (cold deltas are append-only);
-- a round with no deficit never reads cold;
-- deficit rounds read only the hbucket partitions of deficit hosts;
+- n_cold bookkeeping is exact against the live rows of the cold deltas;
+- a drained backlog drops the cold machinery for good;
 - compaction folds deltas without changing any crawl output.
 """
 
 import os
 
 import pytest
+from conftest import CHEAP_CRAWL_LAYOUT as SUB_LAYOUT, MAX_ROUNDS, N, N_SEEDS, SEED
 from pyspark.sql import functions as F
 
 from dnscrawler_spark import datagen
 from dnscrawler_spark.oracle import crawler as oracle
 from dnscrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine, FACT_KINDS
 
-# fixture shape shared with the probes + test_crawl_parity (VERDICT r3
-# #1/#5): every stratified motif — drain, replenish, robots gating,
-# budget sweep, two-wave carries — fires by round 5 at this shape
-N = 240
-SEED = 13
-N_SEEDS = 12
-MAX_ROUNDS = 5
-SUB_ROUNDS = 4  # config-variant crawls: motifs verified to fire by round 4
-# cheap 2/2 state layout for the config-variant crawls — layout-only
-# (parity is layout-independent; engine_run keeps the wide 8/4 layout);
-# bits/buckets match _cfg's defaults, so this is shards+partitions only
-from conftest import CHEAP_CRAWL_LAYOUT as SUB_LAYOUT
-
 
 def _cfg(**kw):
     base = dict(
-        max_rounds=MAX_ROUNDS, seen_shards=8, seen_bits=1 << 16,
-        seen_buckets=1 << 10, partitions=4, stratified=True, gen_seed=SEED,
+        seen_shards=8, seen_bits=1 << 16, seen_buckets=1 << 10, partitions=4,
+        gen_seed=SEED,
     )
     base.update(kw)
     return CrawlConfig(**base)
@@ -53,27 +43,24 @@ def _crawl_conf(crawl_conf):
     yield
 
 
-@pytest.fixture(scope="module")
-def corpus():
-    n_hosts = datagen.default_n_hosts(N)
-    return [datagen.page_row(i, SEED, N, n_hosts) for i in range(N)]
+def _assert_seeds_replenished_from_cold(eng, final):
+    """start() spills every seed to the cold side (round 0 has a cold
+    delta and a backlog) and a deficit replenish drains it by the final
+    round: the crawl's admissions came through the cold path."""
+    s0 = eng.store.load(0)
+    assert s0.aux.get("cold_paths"), "seeds must start on the cold side"
+    assert s0.metrics.get("n_cold_backlog", 0) > 0
+    assert eng.store.load(final.round).metrics.get("n_cold_backlog") == 0
 
 
-@pytest.fixture(scope="module")
-def oracle_result(corpus):
-    seeds = datagen.seed_urls(N_SEEDS, N, seed=SEED)
-    return oracle.crawl(corpus, seeds, max_rounds=MAX_ROUNDS, gen_seed=SEED)
-
-
-@pytest.fixture(scope="module")
-def engine_run(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("strat"))
-    pages = datagen.generate_pages(spark, N, seed=SEED, partitions=4)
-    hs = datagen.generate_host_state(pages)
-    eng = CrawlEngine(spark, pages, root, _cfg())
-    snap = eng.start(datagen.seed_urls(N_SEEDS, N, seed=SEED), hs)
-    final = eng.run(snap)
-    return eng, final
+def _assert_facts(eng, final, ores):
+    results = {r["seed"]: r for r in eng.results(final).collect()}
+    assert set(results) == set(ores.facts)
+    for seed, kinds in ores.facts.items():
+        for kind in FACT_KINDS:
+            want = sorted(kinds.get(kind, set()))
+            got = list(results[seed][kind])
+            assert got == want, f"{seed} {kind}: {got} != {want}"
 
 
 def test_seen_set_parity(engine_run, oracle_result):
@@ -81,6 +68,7 @@ def test_seen_set_parity(engine_run, oracle_result):
     got = {r["url"] for r in eng.seen_urls(final).collect()}
     assert got == oracle_result.seen
     assert len(got) > N_SEEDS
+    _assert_seeds_replenished_from_cold(eng, final)
 
 
 def test_crawl_order_parity(engine_run, oracle_result):
@@ -88,24 +76,19 @@ def test_crawl_order_parity(engine_run, oracle_result):
     full-queue ranking EXACTLY, round by round."""
     eng, final = engine_run
     assert eng.crawl_trace(final) == oracle_result.trace
+    _assert_seeds_replenished_from_cold(eng, final)
 
 
 def test_facts_parity(engine_run, oracle_result):
     eng, final = engine_run
-    results = {r["seed"]: r for r in eng.results(final).collect()}
-    assert set(results) == set(oracle_result.facts)
-    for seed, kinds in oracle_result.facts.items():
-        for kind in FACT_KINDS:
-            want = sorted(kinds.get(kind, set()))
-            got = list(results[seed][kind])
-            assert got == want, f"{seed} {kind}: {got} != {want}"
+    _assert_facts(eng, final, oracle_result)
 
 
 # the 240-page fixture never maps a /priv page onto a robots host, so
 # robots gating needs its own fixture: seeds chosen so the crawl hits a
 # robots-blocked SEED (start()-time gate → pending_blocked) AND a
 # robots-blocked discovered CANDIDATE (enqueue-time gate in the fused
-# pass) — the two new code paths stratified mode introduces.
+# pass) — the two robots paths the stratified frontier introduces.
 ROBOTS_N = 2400
 ROBOTS_SEED_GEN = 42  # seeds below were picked against the seed-42 page
 # identities; this sub-fixture keeps its own gen_seed
@@ -214,52 +197,22 @@ def test_drained_mode_collapses(engine_run):
             assert s.tables["queue_state"] == prev_qs  # referenced, not rewritten
 
 
-@pytest.fixture(scope="module")
-def variant_run(spark, tmp_path_factory, corpus):
-    """ONE hardened config-variant crawl shared by the resume,
-    compaction, and pipelined tests (VERDICT r4 #3: one engine crawl per
-    config shape, each test keeps its own assertions): stratified +
-    pipeline_writes=True + cold_compact_every=0 (compaction every round),
-    interrupted after round 2, flushed (the documented durability point
-    for pipelined stores), then resumed by a FRESH engine from disk only
-    and run to completion. Any of the composed mechanisms — overlapped
-    writes, per-round compaction, cold-path/queue-state/E-filter manifest
-    round-trip, round replay — changing any output fails the parity
-    asserts in the consumers."""
-    root = str(tmp_path_factory.mktemp("strat_variant"))
-    ores = oracle.crawl(
-        corpus, datagen.seed_urls(N_SEEDS, N, seed=SEED), max_rounds=SUB_ROUNDS, gen_seed=SEED
-    )
-    pages = datagen.generate_pages(spark, N, seed=SEED, partitions=4)
-    hs = datagen.generate_host_state(pages)
-    cfg = _cfg(
-        pipeline_writes=True, cold_compact_every=0, max_rounds=SUB_ROUNDS, **SUB_LAYOUT,
-    )
-    eng1 = CrawlEngine(spark, pages, root, cfg)
-    snap = eng1.start(datagen.seed_urls(N_SEEDS, N, seed=SEED), hs)
-    for _ in range(2):
-        snap = eng1.run_round(snap)
-    eng1.flush()  # durability point; beyond it the engine is discarded
-    eng2 = CrawlEngine(spark, pages, root, cfg)
-    resumed = eng2.resume()
-    final = eng2.run(resumed)  # run() flushes pending writes
-    return eng2, resumed, final, ores, pages, cfg
-
-
 def test_resume_equals_uninterrupted(variant_run):
     """Crash after round 2 (post-flush), resume with a fresh engine:
     identical final state — cold paths + queue state + E filter all
     round-trip through the manifest."""
     eng2, resumed, final, ores, _, _ = variant_run
     assert resumed.round == 2
+    assert "queue_state" in resumed.tables
     assert {r["url"] for r in eng2.seen_urls(final).collect()} == ores.seen
     assert eng2.crawl_trace(final) == ores.trace
+    _assert_facts(eng2, final, ores)
 
 
 def test_compaction_preserves_outputs(variant_run):
     """cold_compact_every=0 forces a compaction every round (delta list
     folds to one base) — outputs must be identical, including across the
-    mid-crawl resume in the shared variant run."""
+    mid-crawl resume and pipelined writes of the shared variant run."""
     eng, _, final, ores, _, _ = variant_run
     assert {r["url"] for r in eng.seen_urls(final).collect()} == ores.seen
     assert eng.crawl_trace(final) == ores.trace
@@ -270,10 +223,11 @@ def test_compaction_preserves_outputs(variant_run):
 
 def test_two_wave_stratified_parity(engine_run, oracle_result, corpus):
     """two_wave ∘ stratified composes: two_wave is the ENGINE DEFAULT,
-    so engine_run (cfg() without two_wave) + oracle_result already ARE
-    the two-wave∘stratified parity pair — covered by the seen/trace/
-    facts tests above. This pins that wave B actually FIRES here (some
-    carry target lands a round earlier than single-wave would)."""
+    so engine_run + oracle_result already ARE the two-wave∘stratified
+    parity pair — covered by the seen/trace/facts tests above. This pins
+    that wave B actually FIRES here (some carry target lands a round
+    earlier than single-wave would), and that the engine's own per-round
+    carry count agrees: wave B runs exactly when there are carries."""
     eng, final = engine_run
     ores1 = oracle.crawl(
         corpus, datagen.seed_urls(N_SEEDS, N, seed=SEED),
@@ -289,6 +243,12 @@ def test_two_wave_stratified_parity(engine_run, oracle_result, corpus):
     etrace = eng.crawl_trace(final)
     emoved = [u for rr, u in etrace if u in earliest1 and rr < earliest1[u]]
     assert sorted(emoved) == sorted(moved)
+    carries = [
+        eng.store.load(rr).metrics for rr in eng.store.history() if rr > 0
+    ]
+    assert any(m["n_carry"] > 0 for m in carries)
+    for m in carries:
+        assert m["wave_b_skipped"] == (m["n_carry"] == 0)
 
 
 def test_pipelined_stratified_parity(spark, variant_run):
@@ -296,61 +256,43 @@ def test_pipelined_stratified_parity(spark, variant_run):
     must produce the identical crawl (writes overlapped with the next
     round's compute change durability timing only). Rides the shared
     variant crawl — its whole run (both pre- and post-resume halves)
-    executed with pipelining on."""
+    executed with pipelining on. After the flush every table and cold
+    delta a committed manifest references is a finished write."""
     eng, resumed, final, ores, pages, cfg = variant_run
     assert {r["url"] for r in eng.seen_urls(final).collect()} == ores.seen
     assert eng.crawl_trace(final) == ores.trace
+    for rr in eng.store.history():
+        s = eng.store.load(rr)
+        for path in list(s.tables.values()) + s.aux.get("cold_paths", []):
+            assert os.path.exists(os.path.join(path, "_SUCCESS")), (rr, path)
     eng2 = CrawlEngine(spark, pages, eng.store.root, cfg)
     assert eng2.resume().round == final.round
 
 
-def test_synthetic_fetch_stratified_parity(spark, tmp_path_factory, corpus):
-    root = str(tmp_path_factory.mktemp("strat_synth"))
-    ores = oracle.crawl(
-        corpus, datagen.seed_urls(N_SEEDS, N, seed=SEED), max_rounds=SUB_ROUNDS, gen_seed=SEED
-    )
-    cfg = _cfg(fetch_mode="synthetic", n_pages=N, max_rounds=SUB_ROUNDS, **SUB_LAYOUT)
-    hs = datagen.generate_host_state_synthetic(spark, datagen.default_n_hosts(N))
-    eng = CrawlEngine(spark, None, root, cfg)
-    snap = eng.start(datagen.seed_urls(N_SEEDS, N, seed=SEED), hs)
-    final = eng.run(snap)
-    assert {r["url"] for r in eng.seen_urls(final).collect()} == ores.seen
-    assert eng.crawl_trace(final) == ores.trace
+def test_synthetic_fetch_stratified_parity(synthetic_run, oracle_result):
+    """The synthetic-fetch crawl (no corpus join) through the stratified
+    frontier: seen/trace/facts parity, seeds admitted via the cold side."""
+    eng, final = synthetic_run
+    assert {r["url"] for r in eng.seen_urls(final).collect()} == oracle_result.seen
+    assert eng.crawl_trace(final) == oracle_result.trace
+    _assert_facts(eng, final, oracle_result)
+    _assert_seeds_replenished_from_cold(eng, final)
 
 
-def test_seed_budget_stratified_parity(spark, tmp_path_factory, corpus):
-    """VERDICT r2 #3: per-seed budget in the stratified (10^10) mode.
+def test_seed_budget_stratified_parity(budget_run):
+    """VERDICT r2 #3: per-seed budget on the stratified (10^10) frontier.
     Hot rows demote at round start, a newly exhausted seed's cold
     backlog is demoted by the one-time exhaustion-round sweep, and
     post-exhaustion discoveries ride pending_demote into the next
     round — together EXACTLY the oracle's whole-frontier round-start
-    demotion (seen/trace/facts parity), while budget-quiet rounds never
-    touch cold."""
-    root = str(tmp_path_factory.mktemp("strat_budget"))
-    budget = 6
-    ores = oracle.crawl(
-        corpus, datagen.seed_urls(N_SEEDS, N, seed=SEED),
-        max_rounds=SUB_ROUNDS, seed_budget=budget, gen_seed=SEED,
-    )
-    exceeded = set()
-    for kinds in ores.facts.values():
-        exceeded |= kinds.get("budget_exceeded", set())
-    assert exceeded, "tight budget must demote some frontier rows"
-    pages = datagen.generate_pages(spark, N, seed=SEED, partitions=4)
-    hs = datagen.generate_host_state(pages)
-    eng = CrawlEngine(
-        spark, pages, root, _cfg(seed_budget=budget, max_rounds=SUB_ROUNDS, **SUB_LAYOUT)
-    )
-    snap = eng.start(datagen.seed_urls(N_SEEDS, N, seed=SEED), hs)
-    final = eng.run(snap)
+    demotion. Besides parity, the engine's own exhausted-seed count
+    (carried in the manifest for the sweep) must register the budget."""
+    eng, final, ores = budget_run
     assert {r["url"] for r in eng.seen_urls(final).collect()} == ores.seen
     assert eng.crawl_trace(final) == ores.trace
-    results = {r["seed"]: r for r in eng.results(final).collect()}
-    for seed, kinds in ores.facts.items():
-        for kind in FACT_KINDS:
-            want = sorted(kinds.get(kind, set()))
-            got = list(results[seed][kind])
-            assert got == want, f"{seed} {kind}: {got} != {want}"
+    _assert_facts(eng, final, ores)
+    assert final.aux.get("n_exhausted", 0) > 0
+    assert "seed_state" in final.tables
 
 
 def test_compaction_standalone_parity(spark, tmp_path_factory, corpus):

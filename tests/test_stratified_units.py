@@ -216,3 +216,44 @@ def test_compact_drops_dead_rows(spark, tmp_path):
     assert {r["url"] for r in live.collect()} == {
         "http://a.com/live", "http://b.com/live"
     }
+
+
+def test_read_cold_and_replenish_span_two_deltas(spark, tmp_path):
+    """Two rounds' spills are two ``partitionBy("hbucket")`` delta roots.
+    read_cold must return the rows of both (keeping ``hbucket``, which
+    still prunes directories in every delta's scan), and a replenish
+    pull must rank across both deltas."""
+    def delta(name, specs):
+        path = str(tmp_path / name)
+        _rows(spark, specs).withColumn(
+            "hbucket", strat.hbucket_col(F.col("host"), 8)
+        ).write.partitionBy("hbucket").parquet(path)
+        return path
+
+    paths = [
+        delta("d0", [(f"http://a.com/p{i}", 5, i) for i in (0, 2, 4)]),
+        delta("d1", [(f"http://a.com/p{i}", 5, i) for i in (1, 3, 5)]),
+    ]
+    cold = strat.read_cold(spark, paths)
+    assert "hbucket" in cold.columns
+    assert sorted(r["url"] for r in cold.collect()) == [
+        f"http://a.com/p{i}" for i in range(6)
+    ]
+    qs = _qs(spark, [("a.com", None, 6, 0, True, 4, True)])
+    bucket = qs.select(strat.hbucket_col(F.col("host"), 8).alias("b")).first()["b"]
+    from dnscrawler_spark.plans.checks import explain_str
+
+    pfs = explain_str(cold.filter(F.col("hbucket") == bucket)).split(
+        "PartitionFilters"
+    )[1:]
+    assert len(pfs) == 2 and all("hbucket" in pf.split("]", 1)[0] for pf in pfs)
+    hot = spark.createDataFrame([], cold.drop("hbucket").schema)
+    hot2, qs2, persisted = strat.replenish(
+        spark, hot, qs, paths, n_buckets=8, deficit_buckets=[bucket]
+    )
+    assert sorted(r["url"] for r in hot2.collect()) == [
+        f"http://a.com/p{i}" for i in range(4)
+    ]
+    assert qs2.first()["n_cold"] == 2
+    for df in persisted:
+        df.unpersist()

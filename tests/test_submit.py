@@ -71,7 +71,6 @@ def test_spark_submit_pyfiles_crawl(tmp_path):
             "--seen-shards", str(CHEAP_CRAWL_LAYOUT["seen_shards"]),
             "--seen-bits", str(CHEAP_CRAWL_LAYOUT["seen_bits"]),
             "--seen-buckets", str(CHEAP_CRAWL_LAYOUT["seen_buckets"]),
-            "--stratified",
             # single-wave keeps the subprocess inside the test timeout;
             # this test proves the DEPLOYMENT shape (zip-only imports),
             # two-wave semantics are covered by the parity suites
